@@ -14,23 +14,38 @@ here instead of in five divergent copies.
 constructs every query DataFrame before collecting any, so a keep-0
 registry would let one query's construction retire a sibling's
 still-lazy cache — correctness survives (lineage recompute) but the
-persist pays its materialization cost without ever amortizing.
+persist pays its materialization cost without ever amortizing. ``keep``
+counts registry entries, so a query that registers several handles per
+call opens one generation per call (``new_generation``) and retires whole
+generations: a handle count would split a call's handles.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-__all__ = ["retire_oldest", "persist_into"]
+__all__ = ["retire_oldest", "new_generation", "persist_into"]
 
 
 def retire_oldest(registry: list, keep: int = 0) -> None:
-    """Unpersist and drop all but the newest ``keep`` entries."""
+    """Unpersist and drop all but the newest ``keep`` entries (a handle or
+    a generation list of handles)."""
     while len(registry) > keep:
-        try:
-            registry.pop(0).unpersist()
-        except Exception:  # noqa: BLE001 — session may be gone
-            pass
+        entry = registry.pop(0)
+        for df in entry if isinstance(entry, list) else [entry]:
+            try:
+                df.unpersist()
+            except Exception:  # noqa: BLE001 — session may be gone
+                pass
+
+
+def new_generation(registry: list, keep: int) -> list:
+    """Retire all but the newest ``keep`` generations and open a new one;
+    ``persist_into(df, <returned list>)`` registers a call's handles."""
+    retire_oldest(registry, keep)
+    gen: list = []
+    registry.append(gen)
+    return gen
 
 
 def persist_into(df: DataFrame, registry: list, eager: bool = False) -> DataFrame:

@@ -740,16 +740,19 @@ ORDER BY ls.doc_id
 
 _PIPE_SEQ_LEN = 128
 
-# previous call's internal caches — retired at the next call (bounded at
-# one generation; a long-lived gate/bench session would otherwise
-# accumulate unreachable MEMORY_AND_DISK entries)
+# internal caches of the pipeline-family queries, one generation (list of
+# handles) per call. The previous call's generation survives the next
+# call's construction — build-all-then-execute builds curation_pipeline
+# and incremental_curate before running either — and is retired by the
+# call after it (bounded at two generations; a long-lived gate/bench
+# session would otherwise accumulate unreachable MEMORY_AND_DISK entries)
 _PIPE_CACHES: list = []
 
 
-def _retire_pipe_caches() -> None:
-    from otlp_wire_spark.cacheutil import retire_oldest
+def _pipe_generation() -> list:
+    from otlp_wire_spark.cacheutil import new_generation
 
-    retire_oldest(_PIPE_CACHES, keep=0)
+    return new_generation(_PIPE_CACHES, keep=1)
 
 
 def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -769,9 +772,9 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    anti-join left side, and (transitively) every pack driver action —
     #    without a cache each action re-runs the full scoring+dedup chain
     #    (measured 2.5× end-to-end cost at sf0.1).
-    _retire_pipe_caches()
+    gen = _pipe_generation()
     kept = persist_into(
-        curate(docs, langs=("en",), min_quality=0.3, min_tokens=3), _PIPE_CACHES
+        curate(docs, langs=("en",), min_quality=0.3, min_tokens=3), gen
     )
     # ONE shingle table over the survivors feeds the near-dup candidate
     # pass, the near-dup verify pass AND the decontamination corpus side
@@ -782,7 +785,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would race a cold cache and re-run the scan.
     sh_kept = persist_into(
         dedup.shingle_table(kept, "doc_id", "text", n=3),
-        _PIPE_CACHES,
+        gen,
         eager=True,
     )
     # 2. near-dup removal on the survivors — single-scan LSH→verify, then
@@ -814,7 +817,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.size(tokens_norm_col(F.col("clean_text"))).alias("n_tokens"),
         ),
-        _PIPE_CACHES,
+        gen,
         eager=True,
     )
     return pack_sequences(counted, seq_len=_PIPE_SEQ_LEN).orderBy(
@@ -961,9 +964,9 @@ def q_incremental_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch-time artifacts of the existing corpus: the exact-curated set
     # (near-dup stage INPUT — tombstone contract) persisted once, because
     # fingerprints and shingles both read it
-    _retire_pipe_caches()
+    gen = _pipe_generation()
     existing = persist_into(
-        curate(old, langs=("en",), min_quality=0.3, min_tokens=3), _PIPE_CACHES
+        curate(old, langs=("en",), min_quality=0.3, min_tokens=3), gen
     )
     # impl='arrow' end to end: the banded MinHash over the corpus index is
     # the dominant compute, and the numpy kernel over the PRE-built shingle
@@ -976,8 +979,8 @@ def q_incremental_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two corpus-side tables so the admission's several consumers (band
     # join, Jaccard-verify semi-join, append-only validation) read the
     # materialized index instead of re-tokenizing the corpus per consumer.
-    ex_sh = persist_into(ex_sh, _PIPE_CACHES)
-    ex_bands = persist_into(ex_bands, _PIPE_CACHES)
+    ex_sh = persist_into(ex_sh, gen)
+    ex_bands = persist_into(ex_bands, gen)
     out = incremental_curate(
         new, fps, ex_sh,
         langs=("en",), min_quality=0.3, min_tokens=3,

@@ -8,6 +8,7 @@ local sandbox:
 - Arrow on (zero-copy into pandas UDFs — the reference's zero-copy
   ``[]byte`` views, docs/DESIGN.md:334-341).
 - shuffle partitions sized from parallelism, not the 200 default.
+- generated-class cache sized to the largest call, not the 100 default.
 """
 
 from __future__ import annotations
@@ -17,6 +18,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+# the largest call (curation_pipeline) uses ~150 distinct generated
+# classes; the rest is headroom
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -71,6 +76,14 @@ def get_spark(
         # Nested-schema pruning: only read the struct fields a query selects
         # (the lazy-parse analog, SURVEY.md §4).
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
+        # Generated-class cache. With fewer entries than the distinct classes
+        # of one call, the LRU evicts every class before the next call needs
+        # it again: each call re-runs Janino on all of them and HotSpot
+        # re-JITs the fresh classes anew (curation_pipeline: ~140
+        # recompiles per call at the default 100, ~0 at this size). A STATIC
+        # conf: it only takes effect when the session (JVM) is first built;
+        # foreign sessions get a warning from shipping.ensure_session_ready.
+        .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
         # NOTE on spark.sql.codegen.hugeMethodLimit: lowering it to the
         # JIT's 8000-bytecode DontCompileHugeMethods limit was measured
         # 3× FASTER on the fused generate→parse mega-stage (whose single

@@ -10,15 +10,24 @@ time:
   built by session.get_spark, PYTHONPATH handles it; on foreign sessions
   we zip the package once and ``sc.addPyFile`` it (exactly what
   ``spark-submit --py-files`` does on a cluster).
+
+One session-level setting cannot be established here:
+``spark.sql.codegen.cache.maxEntries`` is a static conf, fixed when the
+session is built. A foreign session below session.CODEGEN_CACHE_ENTRIES
+gets one warning, because there the largest queries recompile and re-JIT
+their generated classes on every call.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+import warnings
 import zipfile
 
 from pyspark.sql import SparkSession
+
+from otlp_wire_spark.session import CODEGEN_CACHE_CONF, CODEGEN_CACHE_ENTRIES
 
 _FLAG = "_otlp_wire_spark_shipped"
 
@@ -27,6 +36,16 @@ def ensure_session_ready(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.ansi.enabled", "false")
     if getattr(spark, _FLAG, False):
         return spark
+    entries = int(spark.conf.get(CODEGEN_CACHE_CONF))
+    if entries < CODEGEN_CACHE_ENTRIES:
+        warnings.warn(
+            f"{CODEGEN_CACHE_CONF}={entries} is below the "
+            f"{CODEGEN_CACHE_ENTRIES} that session.get_spark sets: the "
+            "curation queries will recompile their generated classes on "
+            "every call. It is a static conf; set it when building the "
+            "session.",
+            stacklevel=2,
+        )
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zip_path = os.path.join(
         tempfile.gettempdir(), f"otlp_wire_spark_{os.getpid()}.zip"

@@ -15,6 +15,13 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
+import tempfile
+import warnings
+
+import pytest
+
+from otlp_wire_spark import shipping
+from otlp_wire_spark.session import CODEGEN_CACHE_CONF, CODEGEN_CACHE_ENTRIES
 
 _SCRIPT = r"""
 import sys
@@ -52,3 +59,45 @@ def test_vanilla_session_runs_queries(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
     assert "FOREIGN_OK" in proc.stdout
+
+
+class _StubConf:
+    def __init__(self, values):
+        self.values = dict(values)
+
+    def get(self, key):
+        return self.values[key]
+
+    def set(self, key, value):
+        self.values[key] = value
+
+
+class _StubContext:
+    def addPyFile(self, path):
+        pass
+
+
+class _StubSession:
+    def __init__(self, codegen_entries):
+        self.conf = _StubConf({CODEGEN_CACHE_CONF: str(codegen_entries)})
+        self.sparkContext = _StubContext()
+
+
+@pytest.mark.parametrize(
+    "entries,warns", [(100, True), (CODEGEN_CACHE_ENTRIES, False)]
+)
+def test_small_codegen_cache_warns_once(entries, warns, tmp_path, monkeypatch):
+    """A foreign session's static codegen cache cannot be raised at query
+    time; below get_spark's size it gets ONE warning naming the conf (the
+    per-call recompile would otherwise be silent)."""
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    session = _StubSession(entries)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        shipping.ensure_session_ready(session)
+        shipping.ensure_session_ready(session)
+    msgs = [str(w.message) for w in caught]
+    assert len(msgs) == (1 if warns else 0), msgs
+    if warns:
+        assert CODEGEN_CACHE_CONF in msgs[0]
+    assert session.conf.values["spark.sql.ansi.enabled"] == "false"

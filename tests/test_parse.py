@@ -19,6 +19,7 @@ from otlp_wire_spark.operators.parse import (
     attr_first_value,
     attr_last_value,
     attrs_merged,
+    exploded_nonempty,
     parse_pages,
 )
 
@@ -305,3 +306,19 @@ def test_helper_column_collision_rejected(spark):
     df = generate_pages(spark, 5).withColumn("_ps", F.lit("user data"))
     with pytest.raises(ValueError, match="_ps"):
         parse_pages(df)
+
+
+def test_exploded_nonempty_drops_null_elements_and_empty_arrays(spark):
+    """exploded_nonempty's documented row rule: NULL elements are dropped,
+    and an empty or NULL array yields no rows (explode_outer's placeholder
+    row is filtered) — unlike plain explode, which keeps NULL elements."""
+    df = spark.createDataFrame(
+        [(1, ["a", None, "b"]), (2, []), (3, None), (4, [None]), (5, ["c"])],
+        "id INT, arr ARRAY<STRING>",
+    )
+    got = sorted(
+        tuple(r) for r in exploded_nonempty(df, F.col("arr"), "el", "id").collect()
+    )
+    assert got == [(1, "a"), (1, "b"), (5, "c")]
+    plain = df.select("id", F.explode("arr").alias("el")).collect()
+    assert sorted(r["id"] for r in plain if r["el"] is None) == [1, 4]

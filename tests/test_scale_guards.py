@@ -319,6 +319,33 @@ def test_near_dup_persist_cache_bounded(spark):
     dedup._LAST_PERSISTED_SHINGLES.clear()
 
 
+def test_pipe_caches_survive_build_all_then_execute(spark):
+    """Build curation_pipeline AND incremental_curate, then collect both
+    (a build-all-then-execute caller): building the second must not unpersist
+    the first's eagerly built caches before the first runs. Retirement is
+    by call generation — each call registers 3 handles — so the previous
+    call's handles survive exactly one further construction."""
+    from otlp_wire_spark import queries_ext as qx
+
+    sf = "/root/testdata/sf0.001"
+    qx._PIPE_CACHES.clear()
+    first = qx.q_curation_pipeline(spark, sf)
+    first_gen = list(qx._PIPE_CACHES[-1])
+    assert len(first_gen) == 3
+    second = qx.q_incremental_curate(spark, sf)
+    assert all(h.storageLevel.useMemory for h in first_gen)
+    assert first.collect() and second.collect()
+    assert all(h.storageLevel.useMemory for h in first_gen)
+    # bounded: the next construction retires the first call's generation
+    # (a query other than the first: the cache is keyed by plan, so an
+    # identical rebuild would re-cache exactly the first call's plans)
+    qx.q_incremental_curate(spark, sf)
+    assert not any(h.storageLevel.useMemory for h in first_gen)
+    assert len(qx._PIPE_CACHES) == 2
+    spark.catalog.clearCache()
+    qx._PIPE_CACHES.clear()
+
+
 def test_segment_dedup_hot_boilerplate_segment(spark):
     """3k docs sharing one boilerplate segment: the first-occurrence window
     gets one 3k-row group (sort-spills, never an agg buffer) and exactly
