@@ -34,6 +34,16 @@ _TRACE_OK_RE = re.compile(r"[0-9a-f]{32}\Z")
 _REF_RE = re.compile(r"ref:([^;]*);")
 _DEPTH_RE = re.compile(r"depth:([^;]*);")
 
+# typed records (I8): the attr field number depends on the record type tag
+ATTR_FIELD_BY_TYPE = {2: 9, 3: 1}  # default 7 — mirrors metrics.go:17-53
+_TREC_FULL_RE = re.compile(r"<rec t=\d>.*?</rec>")
+_TREC_T_RE = re.compile(r"<rec t=(\d)>")
+_TREC_F_RES = {
+    1: re.compile(r"f1=([^;]*);"),
+    7: re.compile(r"f7=([^;]*);"),
+    9: re.compile(r"f9=([^;]*);"),
+}
+
 
 # ---------------------------------------------------------------- generation
 
@@ -145,7 +155,7 @@ class Extracted:
 
 
 def extract(html_bytes: bytes | None) -> Extracted:
-    """Single-walk extraction — same contract as the Spark parse UDF."""
+    """Single-walk extraction — same contract as parse.parse_pages."""
     if html_bytes is None:
         return Extracted(0, None, [], 0, None, "null_payload")
     try:
@@ -206,6 +216,36 @@ def extract(html_bytes: bytes | None) -> Extracted:
         trace_id, trace_error, ref_type, ref_id, ref_error,
         nest_depth, nest_error,
     )
+
+
+# parse_pages' struct fields, in struct order
+PARSED_FIELDS = (
+    "severity", "severity_text", "attrs", "record_count", "extracted_text",
+    "trace_id", "trace_error", "ref_type", "ref_id", "ref_error",
+    "nest_depth", "nest_error", "parse_error",
+)
+
+
+def parsed(html_bytes: bytes | None) -> tuple:
+    """extract() as the row of parse_pages' struct (PARSED_FIELDS order,
+    attrs as (key, value) tuples): every field but parse_error is NULL on
+    a quarantined payload."""
+    e = extract(html_bytes)
+    if e.parse_error is not None:
+        return (None,) * (len(PARSED_FIELDS) - 1) + (e.parse_error,)
+    return tuple(getattr(e, f) for f in PARSED_FIELDS)
+
+
+def typed_recs(s: str) -> list[dict]:
+    """Uniform (rec_type, attr) view of a decoded page — same contract as
+    parse.parse_typed_records for one valid-utf8 payload."""
+    out = []
+    for rec in _TREC_FULL_RE.findall(s):
+        t = int(_TREC_T_RE.match(rec).group(1))
+        m = _TREC_F_RES[ATTR_FIELD_BY_TYPE.get(t, 7)].search(rec)
+        # missing selected field → '' (mirror of regexp_extract's no-match)
+        out.append({"rec_type": t, "attr": m.group(1) if m else ""})
+    return out
 
 
 def attr_lookup(attrs: list[tuple[str, str]], key: str) -> str | None:

@@ -927,8 +927,8 @@ def embedding_cosine_pairs(
 ) -> DataFrame:
     """Embedding near-dup pairs: cosine ≥ threshold, exact all-pairs.
 
-    O(n²) — the scale path buckets by LSH first (similarity.py); this exact
-    kernel then verifies candidates only.
+    O(n²) — the scale path probes IVF cells first (similarity.py); this
+    exact kernel then verifies candidates only.
 
     The per-vector norm is computed ONCE PER ROW below the self-join (r6):
     inlined into the pair expression it re-ran the interpreted HOF
@@ -936,24 +936,16 @@ def embedding_cosine_pairs(
     whole kernel. Same arithmetic in the same order (sqrt of the sequential
     square-sum, then multiply, then divide), so the doubles — and the
     round(4) the oracle mirrors — are bit-identical."""
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
+    from otlp_wire_spark.operators.parse import _pushdown_barrier
+    from otlp_wire_spark.operators.similarity import _as_double, _dot, _norm
+
     v = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    ).select("id", "v", norm(F.col("v")).alias("nv"))
+        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
+    ).select("id", "v", _norm(F.col("v")).alias("nv"))
     a, b = v.alias("a"), v.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = dot / (F.col("a.nv") * F.col("b.nv"))
+    cos = _dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nv") * F.col("b.nv"))
     # barrier: the threshold filter otherwise pushes below this projection
     # and re-runs the (interpreted HOF) dot aggregate per pair
-    from otlp_wire_spark.operators.parse import _pushdown_barrier
-
     return (
         a.join(b, F.col("a.id") < F.col("b.id"))
         .select(

@@ -1,12 +1,12 @@
-"""Parse stage — ONE vectorized walk per page, many output columns.
+"""Parse stage — ONE walk per page, many output columns.
 
 Reproduces the reference's extension rule: every accessor reads out of a
 single shared walk so two outputs can never disagree on validity
 (reference docs/DESIGN.md:139-158,198-210; SeverityText rides
 parseLogRecordSeverity's walk, logs.go:121-132). Here that rule is enforced
-by construction: one Arrow-batched pandas UDF returns a struct of ALL
-extracted columns + ``parse_error``, and downstream stages only ever select
-struct fields (Catalyst nested-schema pruning drops the rest at the scan).
+by construction: ``parse_pages`` builds ONE struct of all extracted columns
++ ``parse_error`` over a single utf8-validated copy of the payload, and
+downstream stages only ever select struct fields.
 
 Resolution semantics (SURVEY.md §1.4):
 - ``severity``       — LAST occurrence wins (extractLastBytesField,
@@ -21,30 +21,17 @@ Resolution semantics (SURVEY.md §1.4):
                        which at 10^12 rows becomes per-row fail-fast +
                        exact quarantine counts (SURVEY.md §7).
 
-Everything is Arrow-batched (`ArrowEvalPython` in the physical plan, never
-`BatchEvalPython`); the regex loops run in C inside pandas over whole
-batches — no per-row Python UDFs (BASELINE input_hint mandate).
+The extractor is built from Spark builtins only (try_validate_utf8,
+regexp_extract_all, zip_with): it stays inside whole-stage codegen, with no
+Python worker and no Arrow transfer in the plan. Its independent second
+implementation is the pure-Python ``fixtures.oracle.extract``, which the
+tests compare against on every field.
 """
 
 from __future__ import annotations
 
-import re
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-_SEV_RE = re.compile(r"severity=(\d{1,9});")
-_SEVTEXT_RE = re.compile(r"severity_text=([^;]*);")
-_KV_RE = re.compile(r"kv:([^=;]*)=([^;]*);")
-_REC_RE = re.compile(r"<rec>.*?</rec>")
-_TEXT_RE = re.compile(r"<p>(.*?)</p>", re.DOTALL)
-_TRACE_RE = re.compile(r"trace_id=([^;]*);")
-_TRACE_OK_RE = re.compile(r"[0-9a-f]{32}\Z")
-_REF_RE = re.compile(r"ref:([^;]*);")
-_DEPTH_RE = re.compile(r"depth:([^;]*);")
 
 MAX_NEST_DEPTH = 64  # reference recursion bound, attributes.go:95-97
 
@@ -131,27 +118,6 @@ def exploded_nonempty(df, arr: Column, out_name: str, *keep) -> "DataFrame":
     ).where(F.col(out_name).isNotNull())
 
 
-def _scan_depth(body: str) -> tuple[int | None, str | None]:
-    """(nest_depth, nest_error) for a paren-nested value body — the
-    depth-64 recursion guard (P15, attributes.go:95-97) made iterative:
-    unbalanced → 'unbalanced', max depth > 64 → 'depth_exceeded'."""
-    cur = mx = 0
-    bad = False
-    for ch in body:
-        if ch == "(":
-            cur += 1
-            if cur > mx:
-                mx = cur
-        elif ch == ")":
-            cur -= 1
-            if cur < 0:
-                bad = True
-    if bad or cur != 0:
-        return None, "unbalanced"
-    if mx > MAX_NEST_DEPTH:
-        return None, "depth_exceeded"
-    return mx, None
-
 # trace_id — the fixed-width validated ID analog (reference traces.go:90-124,
 # logs.go:249-264: a TraceID must be exactly 16 bytes; wrong size is a
 # field-level error, empty means absent). Here: exactly 32 lowercase hex
@@ -172,200 +138,19 @@ def _scan_depth(body: str) -> tuple[int | None, str | None]:
 # unbalanced parens → 'unbalanced' — field-level, like every structural
 # failure.
 
-PARSED_SCHEMA = T.StructType(
-    [
-        T.StructField("severity", T.IntegerType()),
-        T.StructField("severity_text", T.StringType()),
-        T.StructField(
-            "attrs",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("key", T.StringType()),
-                        T.StructField("value", T.StringType()),
-                    ]
-                )
-            ),
-        ),
-        T.StructField("record_count", T.IntegerType()),
-        T.StructField("extracted_text", T.StringType()),
-        T.StructField("trace_id", T.StringType()),
-        T.StructField("trace_error", T.StringType()),
-        T.StructField("ref_type", T.StringType()),
-        T.StructField("ref_id", T.StringType()),
-        T.StructField("ref_error", T.StringType()),
-        T.StructField("nest_depth", T.IntegerType()),
-        T.StructField("nest_error", T.StringType()),
-        T.StructField("parse_error", T.StringType()),
-    ]
-)
+# the ``parsed`` struct's fields, in order (``parse_error`` comes last)
+ALL_PARSE_FIELDS = [
+    "severity", "severity_text", "attrs", "record_count", "extracted_text",
+    "trace_id", "trace_error", "ref_type", "ref_id", "ref_error",
+    "nest_depth", "nest_error",
+]
 
 
-# Instrumentation for tests: how many rows took the per-row decode retry in
-# the most recent _decode_batch call (worker-local; tests call directly).
-DECODE_STATS = {"slow_rows": 0, "batches": 0}
-
-
-def _decode_batch(s: pd.Series) -> tuple[pd.Series, pd.Series]:
-    """Decode a Series of bytes → (str Series, error Series).
-
-    Fast path decodes the whole Arrow batch in one shot. A batch containing
-    malformed rows is NOT re-decoded per-row wholesale: a second vectorized
-    pass with errors='replace' marks only the rows that contain U+FFFD
-    (replace only introduces it on malformed input; a row whose replace-
-    decode has no U+FFFD is bit-identical to its strict decode), and only
-    that suspicious subset pays a per-element strict retry — so a 10k-row
-    batch with 1 bad row does ~1 row of Python-loop work, not 10k.
-    """
-    DECODE_STATS["batches"] += 1
-    err = pd.Series([None] * len(s), index=s.index, dtype=object)
-    null_mask = s.isna()
-    err[null_mask] = "null_payload"
-    try:
-        dec = s.str.decode("utf-8")
-        return dec, err
-    except (UnicodeDecodeError, AttributeError):
-        pass
-    try:
-        dec = s.str.decode("utf-8", errors="replace")
-        # explicit bool cast: fillna on the object-dtype contains() result
-        # downcasts implicitly today and is deprecated (pandas FutureWarning)
-        suspicious = (
-            dec.str.contains("�", regex=False).astype(object).eq(True)
-        )
-    except (TypeError, AttributeError):
-        # non-bytes objects in the series — full per-row fallback
-        dec = pd.Series([None] * len(s), index=s.index, dtype=object)
-        suspicious = ~null_mask
-    for idx in s.index[suspicious]:
-        DECODE_STATS["slow_rows"] += 1
-        try:
-            dec.at[idx] = bytes(s.at[idx]).decode("utf-8")
-        except (UnicodeDecodeError, TypeError):
-            dec.at[idx] = None
-    err[dec.isna() & ~null_mask] = "utf8_decode_error"
-    return dec, err
-
-
-def _extract_frame(
-    html: pd.Series, fields: list[str] | None = None
-) -> pd.DataFrame:
-    """Arrow-path extraction. ``fields`` prunes WORK, not just columns:
-    an unrequested extractor's regex scan never runs — the same
-    fields-limiting discipline as parse_pages_expr (without it, a
-    fields-limited arrow parse would silently pay full extraction per
-    row in the Python worker and subset afterwards)."""
-    want = (
-        None if fields is None else set(fields) | {"parse_error"}
-    )
-
-    def _w(*names: str) -> bool:
-        return want is None or bool(want.intersection(names))
-
-    dec, err = _decode_batch(html)
-    ok = dec.fillna("")  # errored rows extract over '' then get nulled below
-    bad = err.notna()
-    cols: dict[str, pd.Series] = {}
-
-    if _w("severity"):
-        sev_lists = ok.str.findall(_SEV_RE)
-        severity = sev_lists.map(lambda xs: int(xs[-1]) if xs else 0)
-        cols["severity"] = severity.mask(bad, None).astype(object)
-
-    if _w("severity_text"):
-        text_lists = ok.str.findall(_SEVTEXT_RE)
-        severity_text = text_lists.map(lambda xs: xs[-1] if xs else None)
-        cols["severity_text"] = severity_text.mask(bad, None).astype(object)
-
-    if _w("attrs"):
-        kv_lists = ok.str.findall(_KV_RE)
-        attrs = kv_lists.map(
-            lambda xs: [{"key": k, "value": v} for k, v in xs]
-        )
-        cols["attrs"] = attrs.mask(bad, None)
-
-    if _w("record_count"):
-        # findall+len (not str.count) so unclosed <rec> blocks don't count —
-        # exact parity with the oracle regex on adversarial inputs.
-        record_count = ok.str.findall(_REC_RE).map(len)
-        cols["record_count"] = record_count.mask(bad, None).astype(object)
-
-    if _w("extracted_text"):
-        first_p = ok.str.extract(_TEXT_RE, expand=False)
-        cols["extracted_text"] = first_p.mask(bad, None).astype(object)
-
-    if _w("trace_id", "trace_error"):
-        # fixed-width validated ID: last-wins, empty→absent, wrong
-        # shape→error
-        traw = ok.str.findall(_TRACE_RE).map(
-            lambda xs: xs[-1] if xs else None
-        )
-        trace_id = traw.map(
-            lambda v: v if v is not None and _TRACE_OK_RE.match(v) else None
-        )
-        trace_error = traw.map(
-            lambda v: "invalid_trace_id"
-            if v is not None and v != "" and not _TRACE_OK_RE.match(v)
-            else None
-        )
-        cols["trace_id"] = trace_id.mask(bad, None).astype(object)
-        cols["trace_error"] = trace_error.mask(bad, None).astype(object)
-
-    if _w("ref_type", "ref_id", "ref_error"):
-        # EntityRef structural validation: first match, 4 fields,
-        # t/i non-empty
-        def _ref(v: object) -> tuple[str | None, str | None, str | None]:
-            if not isinstance(v, str):
-                return (None, None, None)
-            parts = v.split(",")
-            if len(parts) == 4 and parts[0] and parts[1]:
-                return (parts[0], parts[1], None)
-            return (None, None, "invalid_ref")
-
-        rraw = ok.str.extract(_REF_RE, expand=False)
-        refs = rraw.map(_ref)
-        cols["ref_type"] = refs.map(lambda t: t[0]).mask(bad, None).astype(object)
-        cols["ref_id"] = refs.map(lambda t: t[1]).mask(bad, None).astype(object)
-        cols["ref_error"] = refs.map(lambda t: t[2]).mask(bad, None).astype(object)
-
-    if _w("nest_depth", "nest_error"):
-        # depth guard: first match, iterative paren scan, bound at 64
-        draw = ok.str.extract(_DEPTH_RE, expand=False)
-        depths = draw.map(
-            lambda v: _scan_depth(v) if isinstance(v, str) else (None, None)
-        )
-        cols["nest_depth"] = (
-            depths.map(lambda t: t[0]).mask(bad, None).astype(object)
-        )
-        cols["nest_error"] = (
-            depths.map(lambda t: t[1]).mask(bad, None).astype(object)
-        )
-
-    cols["parse_error"] = err
-    return pd.DataFrame(cols)
-
-
-@F.pandas_udf(PARSED_SCHEMA)
-def parse_page_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    for html in it:
-        yield _extract_frame(html)
-
-
-ALL_PARSE_FIELDS = [f.name for f in PARSED_SCHEMA.fields if f.name != "parse_error"]
-
-
-def parse_pages_expr(
+def parse_pages(
     df: DataFrame, html_col: str = "html", fields: list[str] | None = None
 ) -> DataFrame:
-    """JVM-expression extractor — the default hot path.
-
-    Same contract as ``parse_page_udf`` but built entirely from Spark
-    builtins (try_validate_utf8, regexp_extract_all, zip_with): stays inside
-    WholeStageCodegen, no Python workers, no Arrow transfer. This is the
-    "wire path"; the Arrow UDF is the "decode path" — two independent
-    implementations pinned identical by tests/test_parse.py, exactly like
-    the reference's wire-vs-pdata parity gate
-    (benchmark_comparison_test.go:297-301).
+    """Attach the ``parsed`` struct: one column per extracted field plus
+    ``parse_error``.
 
     ``fields`` limits the output struct (parse_error always included).
     Catalyst does NOT prune unused CreateNamedStruct fields here (the
@@ -389,7 +174,7 @@ def parse_pages_expr(
     clash = [c for c in _helper_names if c in df.columns]
     if clash:
         raise ValueError(
-            f"parse_pages_expr: input columns {clash} collide with internal "
+            f"parse_pages: input columns {clash} collide with internal "
             "staging names; rename them before parsing"
         )
     h = F.col(html_col)
@@ -563,81 +348,15 @@ def parse_pages_expr(
     return staged.withColumn("parsed", parsed).drop(*helpers)
 
 
-def parse_pages(
-    df: DataFrame,
-    html_col: str = "html",
-    impl: str = "expr",
-    fields: list[str] | None = None,
-) -> DataFrame:
-    """Attach the parsed struct. ``impl='expr'`` (default) uses the JVM
-    codegen path; ``impl='arrow'`` uses the Arrow UDF path (for payloads
-    whose grammar outgrows Java regex — grok-style extraction).
-
-    Pass ``fields`` with the columns you actually consume — Catalyst keeps
-    the whole struct alive once it's multi-referenced, so unlisted fields'
-    extraction work is otherwise computed and discarded (see
-    parse_pages_expr). parse_error is always included."""
-    if impl == "expr":
-        return parse_pages_expr(df, html_col, fields)
-    if fields is None:
-        return df.withColumn("parsed", parse_page_udf(F.col(html_col)))
-    keep = [f for f in ALL_PARSE_FIELDS if f in fields] + ["parse_error"]
-    schema = T.StructType([f for f in PARSED_SCHEMA.fields if f.name in keep])
-
-    @F.pandas_udf(schema)
-    def _subset_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for html in it:
-            yield _extract_frame(html, keep)[[f.name for f in schema.fields]]
-
-    return df.withColumn("parsed", _subset_udf(F.col(html_col)))
-
-
 # ---------------------------------------------------------------------------
 # I8 — type-DEPENDENT attribute field resolution (reference metrics.go:17-53:
 # the DataPoint attributes field NUMBER depends on the metric body type —
 # histogram→field 9, exponential-histogram→field 1, everything else→field 7 —
 # and downstream consumers see ONE uniform attrs view). Analog grammar:
 # ``<rec t=N>f1=..;f7=..;f9=..;</rec>`` where the rec's attr payload lives in
-# f9 when t=2, f1 when t=3, f7 otherwise; both parser implementations
-# normalize to a uniform array<struct<rec_type,attr>>.
+# f9 when t=2, f1 when t=3, f7 otherwise; the parser normalizes to a uniform
+# array<struct<rec_type,attr>> (pure-Python mirror: fixtures.oracle.typed_recs).
 # ---------------------------------------------------------------------------
-
-TYPED_RECS_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("rec_type", T.IntegerType()),
-            T.StructField("attr", T.StringType()),
-        ]
-    )
-)
-
-ATTR_FIELD_BY_TYPE = {2: 9, 3: 1}  # default 7 — mirrors metrics.go:17-53
-
-_TREC_FULL_RE = re.compile(r"<rec t=\d>.*?</rec>")
-_TREC_T_RE = re.compile(r"<rec t=(\d)>")
-_TREC_F_RES = {
-    1: re.compile(r"f1=([^;]*);"),
-    7: re.compile(r"f7=([^;]*);"),
-    9: re.compile(r"f9=([^;]*);"),
-}
-
-
-def _typed_recs_of(s: str) -> list[dict]:
-    out = []
-    for rec in _TREC_FULL_RE.findall(s):
-        t = int(_TREC_T_RE.match(rec).group(1))
-        m = _TREC_F_RES[ATTR_FIELD_BY_TYPE.get(t, 7)].search(rec)
-        # missing selected field → '' (mirror of regexp_extract's no-match)
-        out.append({"rec_type": t, "attr": m.group(1) if m else ""})
-    return out
-
-
-@F.pandas_udf(TYPED_RECS_SCHEMA)
-def typed_recs_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for html in it:
-        dec, err = _decode_batch(html)
-        recs = dec.fillna("").map(_typed_recs_of)
-        yield recs.mask(err.notna(), None)
 
 
 def typed_recs_expr(s: Column) -> Column:
@@ -654,18 +373,12 @@ def typed_recs_expr(s: Column) -> Column:
     return F.transform(recs, one)
 
 
-def parse_typed_records(
-    df: DataFrame, html_col: str = "html", impl: str = "expr"
-) -> DataFrame:
+def parse_typed_records(df: DataFrame, html_col: str = "html") -> DataFrame:
     """Attach ``typed_recs`` — the uniform attrs view over type-dependent
     field locations. NULL on undecodable payloads (same quarantine contract
-    as the main parse). Two impls, parity-pinned like parse_pages."""
-    if impl == "expr":
-        s = F.expr(f"try_validate_utf8({html_col})")
-        return df.withColumn(
-            "typed_recs", F.when(s.isNotNull(), typed_recs_expr(s))
-        )
-    return df.withColumn("typed_recs", typed_recs_udf(F.col(html_col)))
+    as the main parse)."""
+    s = F.expr(f"try_validate_utf8({html_col})")
+    return df.withColumn("typed_recs", F.when(s.isNotNull(), typed_recs_expr(s)))
 
 
 def attr_first_value(attrs_col: Column, key: str) -> Column:

@@ -1,14 +1,16 @@
-"""Similarity search over embedding columns — brute-force cosine top-k
-(exact baseline) and random-hyperplane LSH bucketing (the scale path).
+"""Similarity search over embedding columns — exact cosine top-k (the
+BLAS kernel ``cosine_topk_arrow``, with the expression kernel
+``cosine_topk`` as its test reference) and IVF coarse-quantizer cells (the
+approximate scale path, ``ivf_ann_topk``).
 
 Scale notes:
-- brute-force top-k is a broadcast of the (small) query set against the
-  corpus — no corpus shuffle, one partial top-k per partition then a final
-  k-merge (Spark's TakeOrdered); exact, O(corpus × queries).
-- lsh_ann buckets corpus and queries by sign-pattern of dot products with
-  deterministic hyperplanes, then brute-forces only within buckets:
-  candidates shrink ~2^-bits; recall measured against the exact kernel in
-  tests (tests/test_ops.py — planted-duplicate + subset-of-exact).
+- exact top-k is a broadcast of the (small) query set against the corpus —
+  no corpus shuffle, one partial top-k per partition then a final k-merge;
+  exact, O(corpus × queries).
+- ivf_ann_topk assigns corpus and queries to their nearest centroids and
+  scores only within the n_probe probed cells: candidates shrink
+  ~n_probe/n_centroids; recall measured against the exact kernel in tests
+  (tests/test_ops.py — planted-duplicate + subset-of-exact).
 """
 
 from __future__ import annotations
@@ -71,29 +73,6 @@ def cosine_topk(
     )
 
 
-def hyperplanes(dim: int, bits: int = 8, seed: int = 7) -> list[list[float]]:
-    """Deterministic pseudo-random unit hyperplanes (no RNG state: a
-    sin-hash of (seed, bit, dim) — reproducible anywhere, incl. tests)."""
-    planes = []
-    for b in range(bits):
-        v = [
-            math.sin(seed * 1000.003 + b * 97.13 + d * 13.37) for d in range(dim)
-        ]
-        n = math.sqrt(sum(x * x for x in v)) or 1.0
-        planes.append([x / n for x in v])
-    return planes
-
-
-def lsh_bucket_col(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-pattern bucket id: bit_i = 1 iff v · plane_i ≥ 0."""
-    v = _as_double(vec)
-    acc = F.lit(0)
-    for i, p in enumerate(planes):
-        dot = _dot(v, F.array(*[F.lit(x) for x in p]))
-        acc = acc + F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return acc.cast("int")
-
-
 def cosine_topk_arrow(
     corpus: DataFrame,
     queries: DataFrame,
@@ -132,8 +111,8 @@ def cosine_topk_arrow(
         raise ValueError(
             f"cosine_topk_arrow: query side exceeds max_queries="
             f"{max_queries}; it is collected+broadcast by design. Batch the "
-            "queries, raise max_queries deliberately, or use lsh_ann_topk/"
-            "ivf_ann_topk for large query sets."
+            "queries, raise max_queries deliberately, or use ivf_ann_topk "
+            "for large query sets."
         )
     q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
     Q = np.array([list(map(float, r[1])) for r in qrows], dtype=np.float64)
@@ -468,46 +447,6 @@ def ivf_ann_topk(
     cos = _dot(F.col("q_v"), F.col("c_v")) / (F.col("_qn") * F.col("_cn"))
     scored = (
         cn.join(F.broadcast(q), on="cell")
-        .where(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", F.round(cos, 4).cast("double").alias("cosine"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .orderBy("q_id", "rank")
-    )
-
-
-def lsh_ann_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 3,
-    bits: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: join only within matching LSH buckets, then rank.
-
-    At 100 TB the bucket join is a hash-shuffle on the (bits)-bit bucket id
-    with corpus pre-bucketed once and reused across query batches."""
-    planes = hyperplanes(dim, bits)
-    c = corpus.select(
-        F.col(id_col).alias("c_id"),
-        _as_double(F.col(vec_col)).alias("c_v"),
-        lsh_bucket_col(F.col(vec_col), planes).alias("bucket"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        _as_double(F.col(vec_col)).alias("q_v"),
-        lsh_bucket_col(F.col(vec_col), planes).alias("bucket"),
-    )
-    cos = _dot(F.col("q_v"), F.col("c_v")) / (
-        _norm(F.col("q_v")) * _norm(F.col("c_v"))
-    )
-    scored = (
-        c.join(F.broadcast(q), on="bucket")
         .where(F.col("q_id") != F.col("c_id"))
         .select("q_id", "c_id", F.round(cos, 4).cast("double").alias("cosine"))
     )

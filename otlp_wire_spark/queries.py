@@ -7,8 +7,8 @@ before value-hashing). Aggregate/computed columns are aliased identically on
 both sides; floats are rounded and cast to double on both sides.
 
 The `wire_*` queries put the REAL pipeline primitives under the oracle:
-``wire_band_histogram`` runs the actual Arrow parse UDF over html built
-from `documents`, and ``wire_shard_counts`` runs the actual FNV-64a shard
+``wire_band_histogram`` runs the actual parser over html built from
+`documents`, and ``wire_shard_counts`` runs the actual FNV-64a shard
 UDF — the DuckDB side recomputes severity arithmetically and FNV-64a in
 pure SQL (HUGEINT arithmetic), so bit-exactness is checked by an
 independent engine.
@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from otlp_wire_spark.functions.fnv import shard_col, fnv64a_col
 from otlp_wire_spark.operators.classify import severity_band_col
-from otlp_wire_spark.operators.parse import parse_page_udf
+from otlp_wire_spark.operators.parse import parse_pages
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -505,15 +505,14 @@ FROM documents GROUP BY 1 ORDER BY 1
 
 
 # --------------------------------------------------------------------------
-# Flagship: REAL Arrow parse UDF under the oracle — html built
-# deterministically from documents, severity resolved last-wins, banded
+# Flagship: REAL parser under the oracle — html built deterministically
+# from documents, severity resolved last-wins, banded
 # --------------------------------------------------------------------------
 
 def q_wire_band_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # byte-scaled fan-out: the full Arrow parse UDF is worth spreading
-    # once the input is more than a few MB (sf1.0: 1.46 s → 0.67 s), but
-    # at sub-MB inputs the exchange + per-task Python round-trips cost
-    # more than the parse — width scales with the size estimate
+    # byte-scaled fan-out: the parse is worth spreading once the input is
+    # more than a few MB, but at sub-MB inputs the exchange costs more than
+    # the parse — width scales with the size estimate
     docs = _fanout(_t(spark, sf_dir, "documents"), chunk=_FANOUT_MIN_CHUNK)
     d = F.col("doc_id")
     sev1 = (d * 7) % 25
@@ -534,7 +533,7 @@ def q_wire_band_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "UTF-8",
     )
-    parsed = docs.withColumn("parsed", parse_page_udf(html))
+    parsed = parse_pages(docs.withColumn("html", html), fields=["severity"])
     return (
         parsed.withColumn("band", severity_band_col(F.col("parsed.severity")))
         .groupBy("band")

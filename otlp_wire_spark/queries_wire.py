@@ -1,9 +1,9 @@
 """Batch-3 driver-contract queries: the FULL parse surface under the
 oracle. Each query builds page html deterministically from `documents`
-(SQL-expressible arithmetic on doc_id), runs the REAL extractor (both
-implementations), and the DuckDB oracle recomputes the expected values
-directly from the same arithmetic — so the parser itself is what's being
-graded, not the generator.
+(SQL-expressible arithmetic on doc_id), runs the REAL extractor, and the
+DuckDB oracle recomputes the expected values directly from the same
+arithmetic — so the parser itself is what's being graded, not the
+generator.
 
 Covers the reference semantics the earlier wire_* queries didn't:
 - record counting through <rec> blocks (A1, logs.go:12-14)
@@ -46,7 +46,9 @@ def _wire_html(d: F.Column) -> F.Column:
     return F.concat(F.lit("<html><body>"), sevtext, kv, recs, F.lit("</body></html>"))
 
 
-def _parsed_docs(spark: SparkSession, sf_dir: str, impl: str) -> DataFrame:
+def _parsed_docs(
+    spark: SparkSession, sf_dir: str, fields: list[str]
+) -> DataFrame:
     # sorted fan-out: every consumer either ends with orderBy("doc_id")
     # (elided work — the expensive parse runs once, post-sort, parallel)
     # or aggregates (where pre-sorting costs nothing at this width)
@@ -54,11 +56,11 @@ def _parsed_docs(spark: SparkSession, sf_dir: str, impl: str) -> DataFrame:
     with_html = docs.withColumn(
         "html", F.encode(_wire_html(F.col("doc_id")), "UTF-8")
     )
-    return parse_pages(with_html, impl=impl)
+    return parse_pages(with_html, fields=fields)
 
 
 def q_wire_record_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact nested-record counting through the real parser (expr impl),
+    """Exact nested-record counting through the real parser,
     scoped per container (lang) — A1 + A4 — MERGED with the per-row error
     semantics of the former wire_quarantine_counts (I11, registry
     consolidated to fit the driver's 50-query grading window): every
@@ -73,7 +75,7 @@ def q_wire_record_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fields-limited: only the record counter's scan runs (parse_error is
     # always included) — the hot-path pruning discipline from CLAUDE.md
     parsed = parse_pages(
-        docs.withColumn("html", html), impl="expr", fields=["record_count"]
+        docs.withColumn("html", html), fields=["record_count"]
     )
     err = F.col("parsed.parse_error")
     return (
@@ -101,11 +103,10 @@ FROM documents GROUP BY 1 ORDER BY 1
 
 
 def q_wire_attr_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-key resolution through the real parser (arrow impl — the
-    alternate path earns oracle coverage here): FIRST-wins lookup,
-    LAST-wins, wire-order merged enumeration, absent-vs-empty
-    severity_text state."""
-    parsed = _parsed_docs(spark, sf_dir, "arrow")
+    """Duplicate-key resolution through the real parser: FIRST-wins
+    lookup, LAST-wins, wire-order merged enumeration, absent-vs-empty
+    severity_text state. The parse is limited to the two fields read."""
+    parsed = _parsed_docs(spark, sf_dir, ["attrs", "severity_text"])
     attrs = F.col("parsed.attrs")
     sevtext = F.col("parsed.severity_text")
     return parsed.select(
@@ -185,8 +186,7 @@ def q_wire_field_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver's 50-query grading window; each field keeps its own pinned
     arithmetic oracle):
 
-    - trace (fixed-width validated ID, arrow impl — the alternate decode
-      path earns oracle coverage here): exactly-32-lowercase-hex → value,
+    - trace (fixed-width validated ID): exactly-32-lowercase-hex → value,
       empty → absent, wrong-length/non-hex → field-level error (reference
       traces.go:90-124, logs.go:249-264: wrong-size ID is an error, empty
       is absent);
@@ -249,7 +249,6 @@ def q_wire_field_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     parsed = parse_pages(
         docs.withColumn("html", html),
-        impl="arrow",
         fields=[
             "trace_id", "trace_error", "ref_type", "ref_id", "ref_error",
             "nest_depth", "nest_error",
@@ -322,7 +321,7 @@ def q_wire_typed_attr_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     html = F.encode(
         F.concat(F.lit("<html><body>"), recs, F.lit("</body></html>")), "UTF-8"
     )
-    typed = parse_typed_records(docs.withColumn("html", html), impl="expr")
+    typed = parse_typed_records(docs.withColumn("html", html))
     return (
         typed.select(F.explode("typed_recs").alias("r"))
         .groupBy(F.col("r.rec_type").alias("rec_type"), F.col("r.attr").alias("attr"))

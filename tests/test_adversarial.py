@@ -1,9 +1,9 @@
 """Adversarial/malformed-payload corpus — mirrors the reference's
 hand-built malformed-wire tests (AGENTS.md:134-141, resource_test.go:366-500,
 otlpwire_test.go:932-947): wrong types, truncation, duplicates, unknown
-fields, out-of-order fields, pathological sizes. Both parser
-implementations must agree byte-for-byte on accept/reject AND on every
-extracted value (accessor-parity rule, operations.md:25)."""
+fields, out-of-order fields, pathological sizes. The parser must agree with
+the independent pure-Python oracle byte-for-byte on accept/reject AND on
+every extracted value (accessor-parity rule, operations.md:25)."""
 
 from __future__ import annotations
 
@@ -12,20 +12,9 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from otlp_wire_spark.fixtures import oracle
-from otlp_wire_spark.operators.parse import (
-    _typed_recs_of,
-    parse_pages,
-    parse_typed_records,
-)
+from otlp_wire_spark.operators.parse import parse_pages, parse_typed_records
 
-PARSED_COLS = [
-    "parsed.severity", "parsed.severity_text", "parsed.attrs",
-    "parsed.record_count", "parsed.extracted_text",
-    "parsed.trace_id", "parsed.trace_error",
-    "parsed.ref_type", "parsed.ref_id", "parsed.ref_error",
-    "parsed.nest_depth", "parsed.nest_error",
-    "parsed.parse_error",
-]
+PARSED_COLS = [f"parsed.{f}" for f in oracle.PARSED_FIELDS]
 
 CORPUS: list[tuple[str, bytes | None]] = [
     ("empty_page", b""),
@@ -81,7 +70,7 @@ CORPUS: list[tuple[str, bytes | None]] = [
     ("depth_unbalanced_close", b"<html><body>depth:(x));</body></html>"),
     ("depth_close_before_open", b"<html><body>depth:)x(;</body></html>"),
     # combined markers in ONE page (the merged wire_field_validation shape)
-    # — cross-extractor interactions must stay pinned across impls
+    # — cross-extractor interactions must stay pinned
     ("combined_all_valid",
      b"<html><body>trace_id=0123456789abcdef0123456789abcdef;"
      b"ref:svc,inst-1,schema,desc;depth:((x));</body></html>"),
@@ -108,41 +97,17 @@ CORPUS: list[tuple[str, bytes | None]] = [
 def corpus_results(spark):
     rows = [(i, name, payload) for i, (name, payload) in enumerate(CORPUS)]
     df = spark.createDataFrame(rows, "id long, name string, html binary")
-    out = {}
-    for impl in ("expr", "arrow"):
-        parsed = parse_pages(df, impl=impl).select("id", "name", *PARSED_COLS)
-        out[impl] = {r["name"]: r for r in parsed.collect()}
-    return out
-
-
-def test_both_impls_agree_on_corpus(corpus_results):
-    for name in corpus_results["expr"]:
-        a, b = corpus_results["expr"][name], corpus_results["arrow"][name]
-        assert tuple(a) == tuple(b), name
+    parsed = parse_pages(df).select("id", "name", *PARSED_COLS)
+    return {r["name"]: r for r in parsed.collect()}
 
 
 def test_corpus_matches_python_oracle(corpus_results):
-    for i, (name, payload) in enumerate(CORPUS):
-        e = oracle.extract(payload)
-        r = corpus_results["expr"][name]
-        assert r["parse_error"] == e.parse_error, name
-        if e.parse_error is None:
-            assert r["severity"] == e.severity, name
-            assert r["severity_text"] == e.severity_text, name
-            assert [(a["key"], a["value"]) for a in r["attrs"]] == e.attrs, name
-            assert r["record_count"] == e.record_count, name
-            assert r["extracted_text"] == e.extracted_text, name
-            assert r["trace_id"] == e.trace_id, name
-            assert r["trace_error"] == e.trace_error, name
-            assert r["ref_type"] == e.ref_type, name
-            assert r["ref_id"] == e.ref_id, name
-            assert r["ref_error"] == e.ref_error, name
-            assert r["nest_depth"] == e.nest_depth, name
-            assert r["nest_error"] == e.nest_error, name
+    for name, payload in CORPUS:
+        assert tuple(corpus_results[name])[2:] == oracle.parsed(payload), name
 
 
 def test_specific_semantics(corpus_results):
-    r = corpus_results["expr"]
+    r = corpus_results
     # wrong-typed value is an unknown field → skipped, absent → 0
     assert r["wrong_type_severity"]["severity"] == 0
     # last-value-wins on duplicated singular field
@@ -203,7 +168,7 @@ def test_specific_semantics(corpus_results):
 
 # ---------------------------------------------------------------------------
 # I8 — typed records: attr field location depends on the type tag
-# (metrics.go:17-53 analog); both impls must normalize identically
+# (metrics.go:17-53 analog); the parser must normalize like the oracle
 # ---------------------------------------------------------------------------
 
 TYPED_CORPUS: list[tuple[str, bytes | None]] = [
@@ -228,21 +193,13 @@ TYPED_CORPUS: list[tuple[str, bytes | None]] = [
 def typed_results(spark):
     rows = [(i, name, payload) for i, (name, payload) in enumerate(TYPED_CORPUS)]
     df = spark.createDataFrame(rows, "id long, name string, html binary")
-    out = {}
-    for impl in ("expr", "arrow"):
-        got = parse_typed_records(df, impl=impl).select("name", "typed_recs")
-        out[impl] = {r["name"]: r["typed_recs"] for r in got.collect()}
-    return out
-
-
-def test_typed_recs_impls_agree(typed_results):
-    for name in typed_results["expr"]:
-        assert typed_results["expr"][name] == typed_results["arrow"][name], name
+    got = parse_typed_records(df).select("name", "typed_recs")
+    return {r["name"]: r["typed_recs"] for r in got.collect()}
 
 
 def test_typed_recs_match_python_mirror(typed_results):
     for name, payload in TYPED_CORPUS:
-        got = typed_results["expr"][name]
+        got = typed_results[name]
         if payload is None:
             assert got is None, name
             continue
@@ -251,12 +208,12 @@ def test_typed_recs_match_python_mirror(typed_results):
         except UnicodeDecodeError:
             assert got is None, name
             continue
-        want = [(r["rec_type"], r["attr"]) for r in _typed_recs_of(s)]
+        want = [(r["rec_type"], r["attr"]) for r in oracle.typed_recs(s)]
         assert [(r["rec_type"], r["attr"]) for r in got] == want, name
 
 
 def test_typed_recs_field_selection(typed_results):
-    r = typed_results["expr"]
+    r = typed_results
     one = lambda name: (r[name][0]["rec_type"], r[name][0]["attr"])  # noqa: E731
     assert one("t0_default_f7") == (0, "b")
     assert one("t2_uses_f9") == (2, "c")
@@ -271,18 +228,18 @@ def test_typed_recs_field_selection(typed_results):
     ]
     assert [(x["rec_type"], x["attr"]) for x in r["untyped_rec_ignored"]] == [(2, "q")]
     assert r["unterminated_rec"] == []
-    assert r["newline_in_body_breaks_rec"] == []  # non-DOTALL both impls
+    assert r["newline_in_body_breaks_rec"] == []  # non-DOTALL
 
 
 # ---------------------------------------------------------------------------
-# property-based: random payloads can NEVER make the two implementations
-# disagree or the parser throw — only accept (values) or reject (error)
+# property-based: random payloads can NEVER make the parser disagree with
+# the oracle or throw — only accept (values) or reject (error)
 # ---------------------------------------------------------------------------
 
 # alphabet includes the marker prefixes/punctuation of EVERY grammar —
 # severity/kv/trace_id/ref/depth markers can all form at random, so the
-# property pins parity across the full extraction surface (incl. the new
-# trace/ref/depth fields in PARSED_COLS)
+# property pins parity across the full extraction surface (every field in
+# PARSED_COLS)
 ascii_junk = st.text(
     alphabet=st.sampled_from(
         list("abcdefghij <>=;:,/kv&%$#@!()[]{}\n\tseverity_trcpdf0123456789")
@@ -294,18 +251,14 @@ ascii_junk = st.text(
 @settings(max_examples=30, deadline=None)
 @given(st.lists(ascii_junk, min_size=1, max_size=40))
 def test_property_impl_parity_on_random_ascii(spark, payloads):
+    """Parser vs oracle on every field of random marker-rich payloads."""
     rows = [(i, p.encode()) for i, p in enumerate(payloads)]
     df = spark.createDataFrame(rows, "id long, html binary")
-    a = parse_pages(df, impl="expr").select("id", *PARSED_COLS).collect()
-    b = parse_pages(df, impl="arrow").select("id", *PARSED_COLS).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    # and both agree with the pure-Python oracle
-    for row in a:
-        e = oracle.extract(rows[row["id"]][1])
-        assert row["parse_error"] == e.parse_error
-        if e.parse_error is None:
-            assert row["severity"] == e.severity
-            assert row["record_count"] == e.record_count
+    out = parse_pages(df).select("id", *PARSED_COLS).collect()
+    assert len(out) == len(payloads)
+    for row in out:
+        payload = rows[row["id"]][1]
+        assert tuple(row)[1:] == oracle.parsed(payload), payload
 
 
 @settings(max_examples=20, deadline=None)
@@ -313,7 +266,7 @@ def test_property_impl_parity_on_random_ascii(spark, payloads):
 def test_property_random_bytes_never_crash(spark, payloads):
     rows = [(i, p) for i, p in enumerate(payloads)]
     df = spark.createDataFrame(rows, "id long, html binary")
-    out = parse_pages(df, impl="expr").select("id", *PARSED_COLS).collect()
+    out = parse_pages(df).select("id", *PARSED_COLS).collect()
     assert len(out) == len(payloads)
     for row in out:
         e = oracle.extract(rows[row["id"]][1])

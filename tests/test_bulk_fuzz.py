@@ -2,9 +2,9 @@
 of hypothesis's one-job-per-example, so thousands of adversarial inputs
 are affordable in-suite. Two surfaces:
 
-- parse: expr vs arrow byte-parity over mixed ascii-junk / raw-bytes /
-  mutated near-valid pages (one-off 100k-payload run was clean; this
-  pins a 6k slice with the same generators and seed family).
+- parse: parser vs the pure-Python oracle on every field over mixed
+  ascii-junk / raw-bytes / mutated near-valid pages (a 6k slice with the
+  same generators and seed family as a one-off clean 100k-payload run).
 - kernels: simhash16 / minhash signature / rolling fingerprint expr vs
   Arrow-numpy twins over random unicode spanning CJK, emoji, accents,
   pathological whitespace, repeats, and nulls (one-off 50k run clean;
@@ -17,17 +17,11 @@ import random
 
 import pyspark.sql.functions as F
 
+from otlp_wire_spark.fixtures import oracle
 from otlp_wire_spark.operators import dedup, textstats
 from otlp_wire_spark.operators.parse import parse_pages
 
-PARSED_COLS = [
-    "parsed.severity", "parsed.severity_text", "parsed.attrs",
-    "parsed.record_count", "parsed.extracted_text",
-    "parsed.trace_id", "parsed.trace_error",
-    "parsed.ref_type", "parsed.ref_id", "parsed.ref_error",
-    "parsed.nest_depth", "parsed.nest_error",
-    "parsed.parse_error",
-]
+PARSED_COLS = [f"parsed.{f}" for f in oracle.PARSED_FIELDS]
 
 _ALPHABET = list("abcdefghij <>=;:,/kv&%$#@!()[]{}\n\tseverity_trcpdf0123456789")
 _MARKERS = [
@@ -91,10 +85,11 @@ def _payloads(rng: random.Random, n: int) -> list[tuple[int, bytes | None]]:
 def test_parse_impl_parity_bulk(spark):
     rows = _payloads(random.Random(0xC0FFEE), 6000)
     df = spark.createDataFrame(rows, "id long, html binary").repartition(8)
-    a = parse_pages(df, impl="expr").select("id", *PARSED_COLS)
-    b = parse_pages(df, impl="arrow").select("id", *PARSED_COLS)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+    out = parse_pages(df).select("id", *PARSED_COLS).collect()
+    assert sorted(r["id"] for r in out) == list(range(len(rows)))
+    for r in out:
+        payload = rows[r["id"]][1]
+        assert tuple(r)[1:] == oracle.parsed(payload), payload
 
 
 _WS = "\t\x0b\x0c\r\n    "

@@ -198,23 +198,6 @@ def test_simhash_arrow_matches_expr(spark):
     assert a == b
 
 
-def test_lsh_ann_finds_planted_duplicate(spark):
-    """A duplicated vector lands in the same LSH bucket by construction and
-    must come back as the top-1 neighbor with cosine 1.0."""
-    dim = 8
-    vecs = []
-    for i in range(40):
-        vecs.append((i, [math.sin(i * 1.7 + d) for d in range(dim)]))
-    vecs.append((999, list(vecs[3][1])))  # exact duplicate of vec 3
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    out = similarity.lsh_ann_topk(
-        df, df.where(F.col("vec_id") == 999), dim=dim, k=3, bits=6
-    ).collect()
-    assert out, "duplicate must share a bucket"
-    top = out[0]
-    assert top["c_id"] == 3 and top["cosine"] == pytest.approx(1.0)
-
-
 def test_ivf_ann_finds_planted_duplicate_and_subsets_exact(spark):
     """IVF: a duplicated vector shares its query's nearest cell by
     construction → must come back top-1 at cosine 1.0; every returned
@@ -288,22 +271,6 @@ def test_ivf_trained_centroids_improve_recall(spark):
     assert r_trained > r_default
     assert r_trained >= 0.85
     assert r_default <= 0.80
-
-
-def test_lsh_ann_subset_of_exact_scores(spark):
-    """Approximate results must carry EXACT cosines (same kernel), and its
-    (q,c) pairs must be a subset of the brute-force scored universe."""
-    dim = 6
-    vecs = [(i, [math.cos(i + d * 0.9) for d in range(dim)]) for i in range(30)]
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    q = df.where(F.col("vec_id") < 3)
-    exact = {
-        (r["q_id"], r["c_id"]): r["cosine"]
-        for r in similarity.cosine_topk(df, q, k=29).collect()
-    }
-    approx = similarity.lsh_ann_topk(df, q, dim=dim, k=5, bits=4).collect()
-    for r in approx:
-        assert exact[(r["q_id"], r["c_id"])] == r["cosine"]
 
 
 def test_cosine_topk_arrow_matches_expr(spark):

@@ -5,7 +5,7 @@ Pins: byte-identical extracted text per url (BASELINE input_hint), last-
 value-wins severity (wire.go:296-321), NULL-vs-'' severity_text
 (logs.go:121-132), duplicate-key attrs in wire order with first-wins lookup
 (attributes.go:336-404, resource_test.go:287-333), per-row parse_error
-quarantine, and the no-per-row-Python plan gate (ArrowEvalPython only).
+quarantine, and the pure-JVM plan gate (no EvalPython at all).
 """
 
 from __future__ import annotations
@@ -16,12 +16,16 @@ import pytest
 from otlp_wire_spark.fixtures import oracle
 from otlp_wire_spark.fixtures.pages import generate_pages
 from otlp_wire_spark.operators.parse import (
+    ALL_PARSE_FIELDS,
     attr_first_value,
     attr_last_value,
     attrs_merged,
     exploded_nonempty,
     parse_pages,
 )
+from otlp_wire_spark.plans.asserts import assert_no_python
+from otlp_wire_spark.queries import QUERIES
+from otlp_wire_spark.queries_wire import QUERIES_WIRE
 
 N = 1200  # covers every modulus class used by the generator
 
@@ -54,24 +58,8 @@ def test_generator_matches_oracle_bytes(parsed_rows):
 def test_extraction_matches_oracle(parsed_rows):
     for i in range(N):
         r = parsed_rows[i]
-        e = oracle.extract(oracle.html(i))
-        if e.parse_error is not None:
-            assert r["parse_error"] == e.parse_error, i
-            assert r["severity"] is None and r["attrs"] is None, i
-            continue
-        assert r["parse_error"] is None, i
-        assert r["severity"] == e.severity, i
-        assert r["severity_text"] == e.severity_text, i  # None vs '' preserved
-        assert [(a["key"], a["value"]) for a in r["attrs"]] == e.attrs, i
-        assert r["record_count"] == e.record_count, i
-        assert r["extracted_text"] == e.extracted_text, i
-        assert r["trace_id"] == e.trace_id, i
-        assert r["trace_error"] == e.trace_error, i
-        assert r["ref_type"] == e.ref_type, i
-        assert r["ref_id"] == e.ref_id, i
-        assert r["ref_error"] == e.ref_error, i
-        assert r["nest_depth"] == e.nest_depth, i
-        assert r["nest_error"] == e.nest_error, i
+        got = tuple(r[f] for f in oracle.PARSED_FIELDS)
+        assert got == oracle.parsed(oracle.html(i)), i
 
 
 def test_depth_guard_states(parsed_rows):
@@ -206,23 +194,25 @@ def test_attr_resolution_semantics(spark):
 
 
 def test_expr_and_arrow_paths_identical(spark):
-    """Two independent extractors over the same bytes must agree on every
-    output AND on accept/reject — the wire-vs-pdata parity gate
-    (reference benchmark_comparison_test.go:297-301, operations.md:25)."""
-    pages = generate_pages(spark, 800)
-    cols = [
-        "page_id", "parsed.severity", "parsed.severity_text", "parsed.attrs",
-        "parsed.record_count", "parsed.extracted_text",
-        "parsed.trace_id", "parsed.trace_error",
-        "parsed.ref_type", "parsed.ref_id", "parsed.ref_error",
-        "parsed.nest_depth", "parsed.nest_error",
-        "parsed.parse_error",
-    ]
-    a = {r["page_id"]: r for r in parse_pages(pages, impl="expr").select(cols).collect()}
-    b = {r["page_id"]: r for r in parse_pages(pages, impl="arrow").select(cols).collect()}
-    assert a.keys() == b.keys()
-    for k in a:
-        assert tuple(a[k]) == tuple(b[k]), k
+    """Every field, parsed ALONE (``fields=[f]``, the pruned plan a hot
+    path runs), must equal the independent pure-Python oracle on the same
+    bytes — value AND accept/reject — the wire-vs-pdata parity gate
+    (reference benchmark_comparison_test.go:297-301, operations.md:25).
+    The oracle's field list is the parser's struct, in order."""
+    assert oracle.PARSED_FIELDS == (*ALL_PARSE_FIELDS, "parse_error")
+    df = generate_pages(spark, 800)
+    for f in ALL_PARSE_FIELDS:
+        df = parse_pages(df, fields=[f]).withColumnRenamed("parsed", f"p_{f}")
+    rows = df.select(
+        "page_id", "html", *[f"p_{f}" for f in ALL_PARSE_FIELDS]
+    ).collect()
+    assert len(rows) == 800
+    for r in rows:
+        want = dict(zip(oracle.PARSED_FIELDS, oracle.parsed(r["html"])))
+        for f in ALL_PARSE_FIELDS:
+            got = r[f"p_{f}"]
+            assert got["parse_error"] == want["parse_error"], (r["page_id"], f)
+            assert got[f] == want[f], (r["page_id"], f)
 
 
 def test_expr_path_is_pure_jvm(spark):
@@ -231,6 +221,34 @@ def test_expr_path_is_pure_jvm(spark):
     df = parse_pages(generate_pages(spark, 10)).select("parsed.severity")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan  # neither Batch- nor Arrow-
+
+
+@pytest.fixture(scope="module")
+def documents_dir(spark, tmp_path_factory):
+    """A 64-row ``documents`` table — the columns the wire queries read."""
+    d = tmp_path_factory.mktemp("docs")
+    spark.range(64).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("text "), F.col("id").cast("string")).alias("text"),
+    ).write.parquet(str(d / "documents.parquet"))
+    return str(d)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["wire_band_histogram", "wire_attr_resolution", "wire_field_validation"],
+)
+def test_wire_query_plan_is_pure_jvm(spark, documents_dir, name):
+    """The graded parse queries run the JVM parser end to end — no Python
+    evaluation anywhere in the executed plan; wire_attr_resolution's parse
+    is field-pruned, so the trace/ref/depth scans are absent too."""
+    df = {**QUERIES, **QUERIES_WIRE}[name](spark, documents_dir)
+    assert_no_python(df)
+    assert df.count() > 0
+    if name == "wire_attr_resolution":
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        for gone in ("trace_id=", "ref:", "depth:"):
+            assert gone not in plan, gone
 
 
 def test_fields_subset_prunes_unused_scans(spark):
@@ -256,49 +274,10 @@ def test_fields_subset_prunes_unused_scans(spark):
         "parsed.record_count", "parsed.parse_error").collect()}
     for r in out.collect():
         assert tuple(r) == tuple(full[r["page_id"]]), r["page_id"]
-    # arrow impl honors the same subset contract
-    arrow = parse_pages(df0, impl="arrow",
-                        fields=["severity", "severity_text", "record_count"])
-    got = {r["page_id"]: r for r in arrow.select("page_id", "parsed.*").collect()}
-    for pid, r in got.items():
-        assert tuple(r) == tuple(full[pid]), pid
-
-
-def test_decode_fallback_is_per_failing_row_only():
-    """A 10k-row batch with 1 malformed row must NOT re-decode the whole
-    batch in Python — only the failing row (plus any legitimately-U+FFFD
-    rows) takes the per-element retry (VERDICT r1 item 6)."""
-    import pandas as pd
-
-    from otlp_wire_spark.operators import parse as parse_mod
-
-    rows = [f"<html><body>severity={i % 25};</body></html>".encode() for i in range(10_000)]
-    rows[1234] = b"\xff\xfe broken"
-    rows[77] = "ok � native replacement char".encode()  # valid, has U+FFFD
-    s = pd.Series(rows)
-    parse_mod.DECODE_STATS["slow_rows"] = 0
-    dec, err = parse_mod._decode_batch(s)
-    # exactness: the one bad row quarantined, everything else decoded
-    assert err[1234] == "utf8_decode_error" and dec[1234] is None
-    assert err.notna().sum() == 1
-    assert dec[77] == "ok � native replacement char"
-    assert dec[0] == "<html><body>severity=0;</body></html>"
-    # efficiency: per-row retry touched only the suspicious rows (2), not 10k
-    assert parse_mod.DECODE_STATS["slow_rows"] <= 2
-
-
-def test_plan_is_arrow_only(spark):
-    """Allocation-gate analog (SURVEY.md §5): when Python IS used (arrow
-    impl), the plan must use ArrowEvalPython (vectorized), never
-    BatchEvalPython (per-row)."""
-    df = parse_pages(generate_pages(spark, 10), impl="arrow").select("parsed.severity")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" in plan
 
 
 def test_helper_column_collision_rejected(spark):
-    """parse_pages_expr stages helper columns under fixed names; an input
+    """parse_pages stages helper columns under fixed names; an input
     that already carries one must fail loudly instead of silently
     destroying the column."""
     import pytest
