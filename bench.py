@@ -74,11 +74,11 @@ def main() -> None:
     # Warm up the JVM + the Python worker pool (workers pay a one-time
     # numpy/pandas import that amortizes to zero at real scale but would
     # dominate a single cold measurement — operations.md:97-103 analog).
-    from otlp_wire_spark.functions.fnv import shard_col
+    from otlp_wire_spark.operators.dedup import simhash16_arrow_col
     from pyspark.sql import functions as _F
 
     spark.range(50_000, numPartitions=cpus).select(
-        shard_col(_F.encode(_F.col("id").cast("string"), "UTF-8"), 8).alias("s")
+        simhash16_arrow_col(_F.col("id").cast("string")).alias("s")
     ).agg(_F.sum("s")).collect()
 
     timings: dict[str, float] = {}

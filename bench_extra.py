@@ -2,11 +2,11 @@
 """Round-6 optimization harness — NOT the graded bench (bench.py is frozen).
 
 Per-query isolation per guide §1: same session shape as bench.py, each
-query timed with N trials after a warm run, optional .explain("formatted")
-dump to plans/r06/<name>_<tag>.txt, and job labels for UI attribution.
+query timed with N trials after a warm run, and job labels for UI
+attribution. Plan shapes are pinned by tests/test_plan_invariants.py.
 
 Usage:
-  python bench_extra.py [--sf-dir DIR] [--trials N] [--explain TAG] q1 q2 ...
+  python bench_extra.py [--sf-dir DIR] [--trials N] q1 q2 ...
   python bench_extra.py --list
 """
 
@@ -28,8 +28,6 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--trials", type=int, default=3)
-    ap.add_argument("--explain", default=None,
-                    help="dump plans/r06/<q>_<TAG>.txt for each query")
     ap.add_argument("--list", action="store_true")
     args = ap.parse_args()
 
@@ -59,25 +57,15 @@ def main() -> None:
     # same worker warmup as bench.py
     from pyspark.sql import functions as _F
 
-    from otlp_wire_spark.functions.fnv import shard_col
+    from otlp_wire_spark.operators.dedup import simhash16_arrow_col
 
     spark.range(50_000, numPartitions=cpus).select(
-        shard_col(_F.encode(_F.col("id").cast("string"), "UTF-8"), 8).alias("s")
+        simhash16_arrow_col(_F.col("id").cast("string")).alias("s")
     ).agg(_F.sum("s")).collect()
 
     out: dict[str, object] = {}
     for name in args.queries:
         fn = all_queries[name]
-        if args.explain:
-            os.makedirs("plans/r06", exist_ok=True)
-            import contextlib
-            import io
-
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                fn(spark, args.sf_dir).explain("formatted")
-            with open(f"plans/r06/{name}_{args.explain}.txt", "w") as f:
-                f.write(buf.getvalue())
         spark.sparkContext.setJobDescription(f"{name}: warm")
         fn(spark, args.sf_dir).collect()
         durs = []

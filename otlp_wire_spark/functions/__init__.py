@@ -3,8 +3,6 @@ from otlp_wire_spark.functions.fnv import (  # noqa: F401
     FNV64_PRIME,
     fnv64a,
     fnv64a_numpy,
-    fnv64a_col,
     fnv64a_expr,
-    shard_col,
     shard_expr,
 )

@@ -7,25 +7,24 @@ reference requires the exact same hash, so this module provides:
 
 - ``fnv64a(bytes) -> int``      — pure-Python definition (the oracle).
 - ``fnv64a_numpy(list) -> u64`` — vectorized numpy kernel (wrapping uint64
-  arithmetic; numpy unsigned overflow wraps mod 2^64 by definition).
-- ``fnv64a_col / shard_col``    — Arrow-batched pandas UDF column exprs.
+  arithmetic; numpy unsigned overflow wraps mod 2^64 by definition) — the
+  MinHash Arrow kernel's hash.
+- ``fnv64a_expr / shard_expr``  — the pure-JVM codegen fold over a string
+  column; binary columns go through the same hex-pair byte fold
+  (``fnv64a_hex_expr`` over ``hex(binary)``, see route.with_shard).
 
 All three are pinned bit-identical to the published FNV-1a 64 test vectors
 and to each other by tests/test_fnv.py. Hash values are carried in Spark as
 the *signed int64 bit pattern* of the uint64 hash (LongType); the mod-N
-shard assignment is computed inside the UDF in uint64 space first, so int64
-sign never influences sharding (SURVEY.md §2.6 F1/F2).
+shard assignment is reconstructed in uint64 space (``shard_of_hash``), so
+int64 sign never influences sharding (SURVEY.md §2.6 F1/F2).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType
 
 FNV64_OFFSET_BASIS = 0xCBF29CE484222325
 FNV64_PRIME = 0x100000001B3
@@ -84,21 +83,27 @@ def fnv64a_numpy(vals: list[bytes]) -> np.ndarray:
     return out
 
 
-def fnv64a_col(col: Column | str) -> Column:
-    """FNV-64a of a binary/string column → LongType (int64 bit pattern)."""
-
-    @F.pandas_udf(LongType())
-    def _fnv(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            h = fnv64a_numpy(list(s))
-            yield pd.Series(h.view(np.int64))
-
-    c = F.col(col) if isinstance(col, str) else col
-    return _fnv(c)
-
-
 FNV64_OFFSET_SIGNED = -3750763034362895579  # int64 bit pattern of the basis
 FNV64_PRIME_SIGNED = 0x100000001B3  # fits in a positive int64
+
+
+def fnv64a_hex_expr(hx: Column) -> Column:
+    """FNV-64a of the bytes an uppercase hex string spells (``hex(binary)``)
+    → LongType bit pattern; ``''`` hashes to the offset basis, like
+    ``fnv64a(b'')``. The byte fold behind both string and binary keys.
+
+    The hex-pair array comes from ONE regexp pass — the hex string appears
+    exactly once, OUTSIDE any lambda. An earlier form indexed
+    ``hx.substr(i*2-1, 2)`` inside the transform lambda; per the Catalyst
+    invariant (lambda bodies re-evaluate outer non-attribute exprs per
+    element) that re-ran the hex derivation for every byte index —
+    O(len²) per key."""
+    pairs = F.regexp_extract_all(hx, F.lit("(..)"), F.lit(1))
+    return F.aggregate(
+        F.transform(pairs, lambda pr: F.conv(pr, 16, 10).cast("long")),
+        F.lit(FNV64_OFFSET_SIGNED).cast("long"),
+        lambda h, b: h.bitwiseXOR(b) * F.lit(FNV64_PRIME_SIGNED),
+    )
 
 
 def fnv64a_expr(col: Column | str) -> Column:
@@ -112,27 +117,15 @@ def fnv64a_expr(col: Column | str) -> Column:
     Byte-exact for ALL strings: pure-ASCII rows take the cheap
     code-point fold (``ascii()`` == byte value for 7-bit input, gated
     per-row by ``octet_length == length``); rows with multi-byte UTF-8 fall
-    to a hex-pair fold over ``hex(encode(c))`` — true byte values, still
-    pure JVM. A non-ASCII route key therefore shards identically to the
-    reference's byte-wise FNV-64a (and to fnv64a/fnv64a_numpy/fnv64a_col).
-    Bit-exactness vs the pure-Python oracle is pinned by tests/test_fnv.py.
+    to the hex-pair byte fold over ``hex(encode(c))`` (fnv64a_hex_expr) —
+    true byte values, still pure JVM. A non-ASCII route key therefore
+    shards identically to the reference's byte-wise FNV-64a (and to
+    fnv64a/fnv64a_numpy). Bit-exactness vs the pure-Python oracle is
+    pinned by tests/test_fnv.py.
     """
     c = F.col(col) if isinstance(col, str) else col
     ascii_fold = F.aggregate(
         F.transform(F.split(c, ""), lambda ch: F.ascii(ch).cast("long")),
-        F.lit(FNV64_OFFSET_SIGNED).cast("long"),
-        lambda h, b: h.bitwiseXOR(b) * F.lit(FNV64_PRIME_SIGNED),
-    )
-    # hex-pair array via ONE regexp pass — the hex string appears exactly
-    # once, OUTSIDE any lambda. An earlier form indexed `hx.substr(i*2-1, 2)`
-    # inside the transform lambda; per the Catalyst invariant (lambda bodies
-    # re-evaluate outer non-attribute exprs per element) that re-ran
-    # hex(encode(c)) for every byte index — O(len²) per non-ASCII string.
-    pairs = F.regexp_extract_all(
-        F.hex(F.encode(c, "UTF-8")), F.lit("(..)"), F.lit(1)
-    )
-    byte_fold = F.aggregate(
-        F.transform(pairs, lambda pr: F.conv(pr, 16, 10).cast("long")),
         F.lit(FNV64_OFFSET_SIGNED).cast("long"),
         lambda h, b: h.bitwiseXOR(b) * F.lit(FNV64_PRIME_SIGNED),
     )
@@ -144,16 +137,17 @@ def fnv64a_expr(col: Column | str) -> Column:
             F.lit(FNV64_OFFSET_SIGNED).cast("long"),
         )
         .when(F.octet_length(c) == F.length(c), ascii_fold)
-        .otherwise(byte_fold)
+        .otherwise(fnv64a_hex_expr(F.hex(F.encode(c, "UTF-8"))))
     )
 
 
-def shard_expr(col: Column | str, num_shards: int) -> Column:
-    """JVM-side ``FNV-64a(key) % num_shards`` with the modulo taken in
-    uint64 space, reconstructed from the signed bit pattern:
+def shard_of_hash(h: Column, num_shards: int) -> Column:
+    """``u64(h) % num_shards`` (IntegerType) for a signed FNV-64a bit
+    pattern ``h``, with the modulo taken in uint64 space:
     ``u64 = h + 2^64`` when h<0, so ``u64 % N = (pmod(h,N) + (2^64 % N)) % N``.
-    Power-of-two N reduces to a mask of the low bits (exact)."""
-    h = fnv64a_expr(col)
+    Power-of-two N reduces to a mask of the low bits (exact). Mirrors
+    ``workerID := hash % numWorkers`` (reference example_test.go:46-48) —
+    ``pmod`` on the signed pattern alone would mis-shard half the keys."""
     if num_shards & (num_shards - 1) == 0:
         return h.bitwiseAND(F.lit(num_shards - 1)).cast("int")
     wrap = (1 << 64) % num_shards
@@ -164,20 +158,7 @@ def shard_expr(col: Column | str, num_shards: int) -> Column:
     ).cast("int")
 
 
-def shard_col(col: Column | str, num_shards: int) -> Column:
-    """``FNV-64a(key) % num_shards`` computed in uint64 space (IntegerType).
-
-    Mirrors ``workerID := hash % numWorkers`` (reference
-    example_test.go:46-48). The modulo MUST happen on the unsigned hash —
-    doing ``pmod`` on the signed bit pattern would mis-shard half the keys.
-    """
-
-    @F.pandas_udf(IntegerType())
-    def _shard(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        nshards = np.uint64(num_shards)
-        for s in it:
-            h = fnv64a_numpy(list(s))
-            yield pd.Series((h % nshards).astype(np.int32))
-
-    c = F.col(col) if isinstance(col, str) else col
-    return _shard(c)
+def shard_expr(col: Column | str, num_shards: int) -> Column:
+    """JVM-side ``FNV-64a(key) % num_shards`` over a string column, in
+    uint64 space (see shard_of_hash)."""
+    return shard_of_hash(fnv64a_expr(col), num_shards)

@@ -10,35 +10,17 @@ struct field (nested-schema pruning) — never the attrs/text fields.
 
 All counts are exact (``F.count``/``F.sum``), never approximate — count
 conservation under split is THE pinned invariant (otlpwire_test.go:129-225).
+The counters run where they are consumed: the per-shard manifests
+(route.write_sharded_with_manifest / shard_manifest), and the graded
+``count_by_type``, ``wire_record_counts`` and ``wire_typed_record_counts``
+queries. This module holds the per-row quarantine split those counts
+conserve across.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def batch_counts(parsed: DataFrame) -> DataFrame:
-    """Batch-level totals (A1-A3 analog): pages, sub-records, payload bytes."""
-    return parsed.agg(
-        F.count(F.lit(1)).alias("page_count"),
-        F.sum(F.col("parsed.record_count")).cast("long").alias("record_count"),
-        F.sum(F.length("html")).cast("long").alias("byte_count"),
-    )
-
-
-def per_group_counts(parsed: DataFrame, group_col: str) -> DataFrame:
-    """Resource-scoped counts (A4 analog — logs.go:22-24): same counters
-    per grouping container (host, lang, shard, ...)."""
-    return (
-        parsed.groupBy(group_col)
-        .agg(
-            F.count(F.lit(1)).alias("page_count"),
-            F.sum(F.col("parsed.record_count")).cast("long").alias("record_count"),
-            F.sum(F.length("html")).cast("long").alias("byte_count"),
-        )
-        .orderBy(group_col)
-    )
 
 
 def quarantine_split(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:

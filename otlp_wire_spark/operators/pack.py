@@ -9,7 +9,7 @@ ONE task — the classic global-window scale trap — so this implements the
 distributed two-pass prefix sum:
 
 1. bucket rows by id against boundary literals collected ONCE on the
-   driver (approx quantiles of the id column) — the bucket is a PURE
+   driver (a hash-order sample of the id column) — the bucket is a PURE
    function of (row id, literals), so every job that touches the data
    assigns identical buckets no matter how Spark re-executes lineage,
 2. per-bucket token totals → collected (one tiny row per bucket) →
@@ -48,19 +48,15 @@ _PACK_CACHE_KEEP = 1
 def _bucket_bounds(df: DataFrame, id_col: str, parts: int) -> list:
     """Approximate id boundary literals — balance only, never correctness
     (any boundary set yields exact prefix sums; skewed buckets just skew
-    work). Numeric ids use approxQuantile; other orderable ids (strings)
-    use a hash-order top-k sample (detsample.hash_order_sample) — both
-    are collected ONCE and become literals, so bucket assignment stays a
-    pure function of the row (two-job-consistency rule; NEVER a seeded
-    reservoir/rand sample, which depends on partition layout). Errors
+    work). Every orderable id type (numeric or string) uses a hash-order
+    top-k sample (detsample.hash_order_sample), collected ONCE; the bounds
+    become literals, so bucket assignment stays a pure function of the row
+    (two-job-consistency rule; NEVER a seeded reservoir/rand sample, which
+    depends on partition layout). The sample is itself a pure function of
+    the data — not of task completion order — so identical calls inline
+    identical literals and reuse their generated classes. Errors
     propagate: silently collapsing to one bucket would serialize the
     pass-2 window into a single task at scale."""
-    from pyspark.sql.types import NumericType
-
-    field = df.schema[id_col]
-    if isinstance(field.dataType, NumericType):
-        probs = [i / parts for i in range(1, parts)]
-        return sorted(set(df.stat.approxQuantile(id_col, probs, 0.001)))
     from otlp_wire_spark.detsample import hash_order_sample
 
     limit = parts * 20
@@ -98,7 +94,7 @@ def global_token_offsets(
     with a smaller id — via the distributed two-pass prefix sum.
 
     INPUT-LINEAGE DISCIPLINE: this evaluates ``df``'s lineage THREE times
-    (boundary quantiles, per-bucket totals, the final window job). Hand it
+    (boundary sample, per-bucket totals, the final window job). Hand it
     a cheap projection — ideally just ``(id, n_tokens)`` joined back
     later, or a persisted DataFrame (q_curation_pipeline persists its
     upstream) — or pass ``persist_input=True`` to have it persisted here
@@ -118,7 +114,7 @@ def global_token_offsets(
         from otlp_wire_spark.cacheutil import persist_into, retire_oldest
 
         retire_oldest(_PACK_CACHES, keep=_PACK_CACHE_KEEP)
-        # eager: quantile/totals jobs race a cold cache
+        # eager: sample/totals jobs race a cold cache
         df = persist_into(df, _PACK_CACHES, eager=True)
     parts = max(2, df.sparkSession.sparkContext.defaultParallelism)
     bounds = _bucket_bounds(df, id_col, parts)

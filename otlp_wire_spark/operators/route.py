@@ -24,7 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from otlp_wire_spark.functions.fnv import shard_col, shard_expr
+from otlp_wire_spark.functions.fnv import (
+    fnv64a_hex_expr,
+    shard_expr,
+    shard_of_hash,
+)
 
 
 def with_shard(
@@ -33,13 +37,16 @@ def with_shard(
     """shard = FNV-64a(route_key bytes) % N, uint64-space modulo
     (example_test.go:46-48; bit-exactness pinned by tests/test_fnv.py).
 
-    String route keys take the pure-JVM codegen path — byte-exact for any
-    UTF-8 content (ASCII rows use the cheap code-point fold, multi-byte rows
-    a hex-pair byte fold; see fnv64a_expr). Binary keys take the Arrow-UDF
-    path. All paths are pinned bit-identical."""
+    Pure JVM for both key types. String keys: byte-exact for any UTF-8
+    content (ASCII rows use the cheap code-point fold, multi-byte rows the
+    hex-pair byte fold; see fnv64a_expr). Binary keys: the same hex-pair
+    byte fold over ``hex(key)`` — any bytes, valid UTF-8 or not; a NULL
+    key hashes like empty bytes, as a NULL string key does. Both pinned
+    bit-identical to the pure-Python fnv64a by tests/test_fnv.py."""
     if dict(df.dtypes).get(route_key_col) == "binary":
+        hx = F.coalesce(F.hex(F.col(route_key_col)), F.lit(""))
         return df.withColumn(
-            "shard", shard_col(F.col(route_key_col), num_shards)
+            "shard", shard_of_hash(fnv64a_hex_expr(hx), num_shards)
         )
     return df.withColumn("shard", shard_expr(F.col(route_key_col), num_shards))
 

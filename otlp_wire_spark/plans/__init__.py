@@ -1,6 +1,7 @@
 from otlp_wire_spark.plans.asserts import (  # noqa: F401
     executed_plan,
-    assert_arrow_only,
+    optimized_plan,
+    count_in_plan,
     assert_broadcast_join,
     assert_no_python,
     assert_pushed_filter,

@@ -1,8 +1,9 @@
-"""Physical-plan assertions — the allocation-gate analog (SURVEY.md §5.6):
-the reference pins zero-alloc hot paths with testing.AllocsPerRun; we pin
-plan shape: no per-row Python, broadcast (not shuffle) joins, filters
-pushed into the scan. Used by tests and available to users auditing their
-own compositions."""
+"""Plan assertions — the allocation-gate analog (SURVEY.md §5.6): the
+reference pins zero-alloc hot paths with testing.AllocsPerRun; we pin plan
+shape: no Python evaluation, broadcast (not shuffle) joins, filters pushed
+into the scan, and how often an expensive expression appears in the
+optimized plan (tests/test_plan_invariants.py). Used by tests and
+available to users auditing their own compositions."""
 
 from __future__ import annotations
 
@@ -13,16 +14,21 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def optimized_plan(df: DataFrame) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def count_in_plan(df: DataFrame, fragment: str) -> int:
+    """Occurrences of ``fragment`` in the optimized logical plan — how many
+    times Catalyst will evaluate an expression (it does not CSE across
+    operators, so a substituted alias shows up once per copy)."""
+    return optimized_plan(df).count(fragment)
+
+
 def assert_no_python(df: DataFrame) -> None:
     """Hot paths must be pure JVM — neither Arrow- nor row-Python."""
     plan = executed_plan(df)
     assert "EvalPython" not in plan, f"Python evaluation in plan:\n{plan[:2000]}"
-
-
-def assert_arrow_only(df: DataFrame) -> None:
-    """Where Python IS used it must be Arrow-batched, never per-row."""
-    plan = executed_plan(df)
-    assert "BatchEvalPython" not in plan, f"per-row Python in plan:\n{plan[:2000]}"
 
 
 def assert_broadcast_join(df: DataFrame) -> None:

@@ -9,9 +9,9 @@ both sides; floats are rounded and cast to double on both sides.
 The `wire_*` queries put the REAL pipeline primitives under the oracle:
 ``wire_band_histogram`` runs the actual parser over html built from
 `documents`, and ``wire_shard_counts`` runs the actual FNV-64a shard
-UDF — the DuckDB side recomputes severity arithmetically and FNV-64a in
-pure SQL (HUGEINT arithmetic), so bit-exactness is checked by an
-independent engine.
+expression — the DuckDB side recomputes severity arithmetically and
+FNV-64a in pure SQL (HUGEINT arithmetic), so bit-exactness is checked by
+an independent engine.
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from otlp_wire_spark.functions.fnv import shard_col, fnv64a_col
+from otlp_wire_spark.functions.fnv import fnv64a_expr, shard_expr
 from otlp_wire_spark.operators.classify import severity_band_col
 from otlp_wire_spark.operators.parse import parse_pages
 
@@ -447,16 +447,14 @@ FROM (SELECT md5(text) AS h, min(doc_id) AS keep_doc_id, count(*) AS n_copies
 # --------------------------------------------------------------------------
 
 def q_fingerprint_fnv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # sorted fan-out replaces the trailing orderBy: the Arrow FNV UDF runs
+    # sorted fan-out replaces the trailing orderBy: the JVM FNV fold runs
     # once (not once more in the sort's range sampler) and in parallel
     docs = _sorted_fanout(
         _t(spark, sf_dir, "documents").where(F.col("doc_id") < 100), "doc_id"
     )
     return docs.select(
         "doc_id",
-        fnv64a_col(F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8")).alias(
-            "fnv64"
-        ),
+        fnv64a_expr(F.coalesce(F.col("text"), F.lit(""))).alias("fnv64"),
     )
 
 
@@ -477,16 +475,15 @@ FROM (
 # --------------------------------------------------------------------------
 
 def q_wire_shard_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # deliberately NOT fanned out: the numpy-vectorized shard UDF over one
-    # Arrow batch is cheaper than any repartition of the row (measured at
-    # sf0.1 AND sf1.0 — the exchange lost at both sizes)
+    # deliberately NOT fanned out: at sf0.1 AND sf1.0 a repartition of the
+    # row cost more than the per-row shard computation it would spread
     docs = _t(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("https://"), F.col("source"), F.lit(".example.com/doc"),
         F.col("doc_id").cast("string"),
     )
     return (
-        docs.withColumn("shard", shard_col(F.encode(url, "UTF-8"), 8))
+        docs.withColumn("shard", shard_expr(url, 8))
         .groupBy("shard")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -562,7 +559,8 @@ FROM sev GROUP BY 1 ORDER BY 1
 # tail; Spark's analog is LIMIT pushdown into the scan) — MERGED with the
 # metadata-only COUNT(*) pushdown (logs.go:134-153 zero-alloc counting;
 # SURVEY.md §4): the count subplan is still answered from parquet
-# row-group stats, witnessed in BENCH/PLAN_AUDIT.md
+# row-group stats (zero-column scan pinned by
+# tests/test_plan_invariants.py::test_early_stop_count_scan_reads_no_columns)
 # --------------------------------------------------------------------------
 
 def q_early_stop(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,9 +7,9 @@ The docstring claims ("~20× simhash", "~order of magnitude minhash") become
 numbers here. Input: sf0.1 documents (5k rows) replicated ×REP to ~200k
 rows (~60 MB of text) so per-row kernel cost dominates scheduling noise;
 each measurement is the median of 3 in-JVM trials after a warm-up run
-(same methodology as bench.py). FNV is included in the OTHER direction —
-there the pure-JVM codegen fold beats the Arrow round-trip, which is why
-the route path uses it; honest numbers both ways.
+(same methodology as bench.py). FNV-64a has no Arrow twin left: the
+pure-JVM codegen fold beat the Arrow round-trip, so it is the only Spark
+FNV path.
 
 Run: python scripts/kernel_bench.py   (env: SPARK_GRAFT_CPUS, SPARK_GRAFT_KB_REP)
 """
@@ -52,7 +52,6 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from otlp_wire_spark.functions.fnv import fnv64a_col, fnv64a_expr
     from otlp_wire_spark.operators import dedup, similarity, textstats
 
     base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
@@ -134,16 +133,6 @@ def main() -> None:
         lambda: similarity.cosine_topk_arrow(emb, queries, k=3).collect(),
     )
 
-    # FNV-64a — the counter-example: pure-JVM codegen fold WINS (no Arrow
-    # transfer), which is why route/shard use fnv64a_expr on strings
-    add(
-        "fnv64a",
-        lambda: docs.select(fnv64a_expr(t).alias("h"))
-        .agg(F.sum("h")).collect(),
-        lambda: docs.select(fnv64a_col(t).alias("h"))
-        .agg(F.sum("h")).collect(),
-    )
-
     out = {
         "n_docs": n_docs,
         "n_vectors": n_vec,
@@ -185,10 +174,8 @@ def main() -> None:
         "overhead beats BLAS at toy size); its value is the per-batch "
         "partial top-k, which bounds the rank-stage shuffle to "
         "partitions×k×|Q| rows instead of |corpus|×|Q| — a shuffle-volume "
-        "property that matters at 100 TB, not a local CPU win. FNV-64a "
-        "goes the other way entirely: the codegen'd aggregate fold stays "
-        "JVM-side with no Arrow transfer, which is why route/shard use "
-        "`fnv64a_expr`. Each operator ships both impls, parity-pinned.",
+        "property that matters at 100 TB, not a local CPU win. Each "
+        "operator here ships both impls, parity-pinned.",
         "",
     ]
     os.makedirs(os.path.join(os.path.dirname(__file__), "..", "BENCH"), exist_ok=True)

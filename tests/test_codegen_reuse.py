@@ -14,9 +14,10 @@ from __future__ import annotations
 from otlp_wire_spark.queries_ext import QUERIES_EXT
 
 SF = "/root/testdata/sf0.001"
-# pack._bucket_bounds inlines approxQuantile boundaries as literals, and
-# the quantile merge order can differ between calls, so a few classes may
-# legitimately recompile; LRU thrash recompiles ~140
+# a repeated call can still recompile a few classes (14-24 seen on the
+# third call): AQE numbers whole-stage-codegen stages in the order their
+# query stages are planned, and the stage id is part of the generated class
+# name, so a renumbered stage misses the cache; LRU thrash recompiles ~140
 MAX_STEADY_COMPILES = 20
 
 

@@ -12,12 +12,12 @@ import pytest
 from otlp_wire_spark.functions.fnv import (
     FNV64_OFFSET_BASIS,
     fnv64a,
-    fnv64a_numpy,
-    fnv64a_col,
     fnv64a_expr,
-    shard_col,
+    fnv64a_numpy,
     shard_expr,
 )
+from otlp_wire_spark.operators.route import with_shard
+from otlp_wire_spark.plans.asserts import executed_plan
 
 # Published FNV-1a 64 test vectors (IETF draft-eastlake-fnv, public domain).
 KNOWN = [
@@ -55,11 +55,9 @@ def test_udf_matches_pure_and_shards_in_uint64_space(spark):
     rng = random.Random(11)
     urls = [f"https://host{rng.randrange(99)}.example.com/p{i}" for i in range(500)]
     df = spark.createDataFrame(pd.DataFrame({"url": urls}))
-    from pyspark.sql import functions as F
-
     out = (
-        df.withColumn("h", fnv64a_col(F.encode("url", "UTF-8")))
-        .withColumn("shard", shard_col(F.encode("url", "UTF-8"), 8))
+        df.withColumn("h", fnv64a_expr("url"))
+        .withColumn("shard", shard_expr("url", 8))
         .collect()
     )
     for row in out:
@@ -151,5 +149,26 @@ def test_jvm_expr_plan_has_no_python(spark):
     df = spark.range(100).select(
         fnv64a_expr(F.col("id").cast("string")).alias("h")
     )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
+    assert "EvalPython" not in executed_plan(df)
+
+
+@pytest.mark.parametrize("num_shards", [8, 7])
+def test_with_shard_binary_key_matches_pure(spark, num_shards):
+    """A BINARY route key shards by the byte-wise FNV-64a of its bytes —
+    invalid UTF-8, empty and NULL keys included (NULL hashes like empty
+    bytes, as a NULL string key does) — in uint64 space, for power-of-two
+    and general N."""
+    rng = random.Random(31)
+    keys = [b"", b"\xff", b"\xc3\x28", b"\x00\x80\xfe", "café".encode()]
+    keys += [
+        bytes(rng.randrange(256) for _ in range(rng.randrange(1, 60)))
+        for _ in range(300)
+    ]
+    rows = [(i, k) for i, k in enumerate(keys)] + [(len(keys), None)]
+    df = spark.createDataFrame(rows, "i long, k binary")
+    out = with_shard(df, "k", num_shards).select("i", "shard").collect()
+    assert len(out) == len(rows)
+    for r in out:
+        want = fnv64a(rows[r["i"]][1] or b"")
+        assert r["shard"] == want % num_shards, rows[r["i"]][1]
+    assert "EvalPython" not in executed_plan(with_shard(df, "k", num_shards))

@@ -14,6 +14,7 @@ from otlp_wire_spark.operators.curate import (
     curation_index,
     incremental_curate,
 )
+from otlp_wire_spark.plans.asserts import executed_plan
 
 _W = [
     "the", "quick", "brown", "fox", "jumps", "over", "and", "lazy",
@@ -171,8 +172,15 @@ def test_incremental_candidates_join_parquet_band_index(spark, tmp_path):
         bucket_cap=10_000_000,
         existing_bands=spark.read.parquet(bdir),
     )
-    plan = admitted._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(admitted)
     assert "bands" in plan  # the stored band table is in the plan
+    # the stored band index is narrowed to the batch's buckets by a
+    # broadcast LEFT SEMI join on the band signature — never a corpus-wide
+    # signature recompute or shuffle
+    assert any(
+        "BroadcastHashJoin" in ln and "LeftSemi" in ln and "band_sig" in ln
+        for ln in plan.splitlines()
+    ), plan
     # the corpus shingle index is scanned EXACTLY once (the id_a verify
     # side) — the sh_b side must come from the batch's own shingle table,
     # never a second full index scan (pre-r5-review shape paid one whose

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from otlp_wire_spark.operators import dedup
+from otlp_wire_spark.plans.asserts import executed_plan
 
 DOCS = [
     # three near-identical docs (shared buckets), one unique, one empty,
@@ -82,7 +83,7 @@ def test_persist_scans_corpus_once(spark, docs):
 
 
 def test_persist_plan_reads_cache(spark, docs):
-    plan = dedup.near_dup_pairs(docs, persist=True)._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(dedup.near_dup_pairs(docs, persist=True))
     assert "InMemoryTableScan" in plan
     spark.catalog.clearCache()
 

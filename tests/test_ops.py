@@ -17,6 +17,7 @@ from otlp_wire_spark.operators.multimodal import (
     extract_media_features,
     generate_media,
 )
+from otlp_wire_spark.plans.asserts import executed_plan
 
 
 def test_exact_dedup_keeps_min_id(spark):
@@ -110,12 +111,7 @@ def test_minhash_lsh_hot_bucket_capped_and_observed(spark):
     assert m["truncated_buckets"] == 4
     assert m["truncated_ids"] == 4 * (n - cap)
     # plan shape: cap applied via Window+Filter upstream of the aggregate
-    plan = (
-        dedup.minhash_lsh_candidates(df, bucket_cap=cap)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = executed_plan(dedup.minhash_lsh_candidates(df, bucket_cap=cap))
     assert "Window" in plan
     assert plan.index("Window") > plan.index("ObjectHashAggregate") or (
         "collect_list" in plan  # aggregate appears above (=after) the window
@@ -479,7 +475,7 @@ def test_multimodal_features_and_quarantine(spark):
 
 def test_multimodal_plan_is_arrow(spark):
     df = extract_media_features(generate_media(spark, 10))
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert "BatchEvalPython" not in plan
 
 
@@ -554,7 +550,7 @@ def test_segment_dedup_hot_segment_plan_is_aggregate_not_window(spark):
         [(i, f"w{i} w{i+1} w{i+2}") for i in range(50)],
         "doc_id long, text string",
     )
-    plan = dedup.segment_dedup(df)._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(dedup.segment_dedup(df))
     assert "BatchEvalPython" not in plan
     assert "Window" not in plan, "segment window regression"
     assert "partial_min" in plan, "first-occurrence must map-side combine"
@@ -713,12 +709,11 @@ def test_stratified_sample_window_input_is_o_quota_not_o_stratum(spark):
     rows = [(i, f"tok{i} alpha{i % 97} beta{i % 31}", "big") for i in range(n)]
     df = spark.createDataFrame(rows, "doc_id long, text string, stratum string")
     obs = Observation("surv")
-    got = {
-        (r.stratum, r.doc_id)
-        for r in stratified_sample(
-            df, "stratum", quota, observation=obs
-        ).collect()
-    }
+    sampled = stratified_sample(df, "stratum", quota, observation=obs)
+    # the per-stratum hash threshold reaches the pre-filter through a
+    # broadcast join (narrow, fully parallel)
+    assert "BroadcastHashJoin" in executed_plan(sampled)
+    got = {(r.stratum, r.doc_id) for r in sampled.collect()}
     assert got == _exact_sample_reference(rows, quota)
     surv = int(obs.get["window_input_rows"])
     assert surv >= quota

@@ -23,7 +23,11 @@ from otlp_wire_spark.operators.parse import (
     exploded_nonempty,
     parse_pages,
 )
-from otlp_wire_spark.plans.asserts import assert_no_python
+from otlp_wire_spark.plans.asserts import (
+    assert_no_python,
+    executed_plan,
+    optimized_plan,
+)
 from otlp_wire_spark.queries import QUERIES
 from otlp_wire_spark.queries_wire import QUERIES_WIRE
 
@@ -219,7 +223,7 @@ def test_expr_path_is_pure_jvm(spark):
     """The default (expr) parse path must contain NO Python evaluation at
     all — whole-stage codegen end to end."""
     df = parse_pages(generate_pages(spark, 10)).select("parsed.severity")
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert "EvalPython" not in plan  # neither Batch- nor Arrow-
 
 
@@ -246,7 +250,7 @@ def test_wire_query_plan_is_pure_jvm(spark, documents_dir, name):
     assert_no_python(df)
     assert df.count() > 0
     if name == "wire_attr_resolution":
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        plan = optimized_plan(df)
         for gone in ("trace_id=", "ref:", "depth:"):
             assert gone not in plan, gone
 
@@ -261,7 +265,7 @@ def test_fields_subset_prunes_unused_scans(spark):
     )
     sub = parse_pages(df0, fields=["severity", "severity_text", "record_count"])
     out = sub.select("page_id", "parsed.*")
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    plan = optimized_plan(out)
     for gone in (r"kv:([^=;]*)", r"(?s)<p>(.*?)</p>", r"trace_id=([^;]*)",
                  r"ref:([^;]*)"):
         assert gone not in plan, gone

@@ -14,6 +14,7 @@ import pytest
 from otlp_wire_spark.fixtures import oracle
 from otlp_wire_spark.fixtures.pages import generate_lookup, generate_pages
 from otlp_wire_spark.pipeline import run_pipeline
+from otlp_wire_spark.plans.asserts import executed_plan
 
 N = 2000
 NUM_SHARDS = 8
@@ -179,7 +180,7 @@ def test_broadcast_join_in_plan(spark):
     from otlp_wire_spark.operators.enrich import enrich, with_url_host
 
     df = enrich(with_url_host(generate_pages(spark, 100)), generate_lookup(spark))
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from otlp_wire_spark.operators import similarity
+from otlp_wire_spark.plans.asserts import executed_plan
 
 
 @pytest.fixture(scope="module")
@@ -49,7 +50,7 @@ def test_ivf_persisted_cells_reused_across_query_batches(spark, vectors):
             df = similarity.ivf_ann_topk(
                 vectors, q, dim=8, k=2, n_centroids=4, assigned=assigned
             )
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = executed_plan(df)
             # corpus side must read the cache, not recompute the assignment
             assert "InMemoryTableScan" in plan
             # and the corpus is never shuffled: it feeds the broadcast join
