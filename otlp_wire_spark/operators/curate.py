@@ -59,7 +59,13 @@ def contaminated_ids(
     removes one full tokenize+shingle pass over the surviving corpus (the
     shingle set of a doc is a pure function of its text, so a superset
     table restricted to the corpus ids is exactly ``_shingled(corpus)``;
-    pinned by a parity test)."""
+    pinned by a parity test).
+
+    Contract with ``corpus_shingles``: ``n`` and ``text_col`` are NOT used
+    for the corpus side (they still shingle the benchmark side). The table
+    must cover every corpus id — a corpus id missing from it is silently
+    reported clean — and must be built with the same tokenizer and the
+    same ``n`` as the benchmark side, or the shingles never match."""
     from otlp_wire_spark.operators.parse import exploded_nonempty
 
     if corpus_shingles is not None:
@@ -90,9 +96,11 @@ def score_documents(
 ) -> DataFrame:
     """Attach pred_lang / quality (unrounded double) / n_tokens — narrow
     projections, no shuffle. Tokenization runs ONCE per row: the token
-    array (and its lowercased twin) are materialized as projection aliases
-    and every scorer reads the columns (the single-column scorer forms
-    would re-run the regex split per reference — ~10× per row).
+    array, its lowercased twin and the four language-marker counts are
+    materialized as projection aliases and every scorer reads the columns
+    (the single-column scorer forms would re-run the regex split per
+    reference — ~10× per row; inline marker counts re-run their
+    ``array_intersect`` per CASE branch — 24 instead of 4).
 
     Every scorer output is wrapped in a pushdown barrier (r6): a filter on
     the scored columns — ``curate()``'s keep condition is the canonical
@@ -113,15 +121,19 @@ def score_documents(
     else:
         _barrier = _pushdown_barrier
     t = F.col(text_col)
-    tokd = df.withColumn("_toks", textstats.tokens_norm_col(t)).withColumn(
-        # ascii_lower, not F.lower: membership tests against ASCII word
-        # lists must fold identically in both engines (see textstats)
-        "_tl", F.transform(F.col("_toks"), textstats.ascii_lower)
+    tokd = (
+        df.withColumn("_toks", textstats.tokens_norm_col(t))
+        .withColumn(
+            # ascii_lower, not F.lower: membership tests against ASCII word
+            # lists must fold identically in both engines (see textstats)
+            "_tl", F.transform(F.col("_toks"), textstats.ascii_lower)
+        )
+        .withColumn("_mc", textstats.lang_marker_counts(F.col("_tl")))
     )
     return (
         tokd.withColumn(
             "pred_lang",
-            _barrier(textstats.lang_id_from_tokens(F.col("_tl"))),
+            _barrier(textstats.lang_from_marker_counts(F.col("_mc"))),
         )
         .withColumn(
             "quality",
@@ -130,7 +142,7 @@ def score_documents(
             ),
         )
         .withColumn("n_tokens", _barrier(F.size(F.col("_toks")).cast("int")))
-        .drop("_toks", "_tl")
+        .drop("_toks", "_tl", "_mc")
     )
 
 

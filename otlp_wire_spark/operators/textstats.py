@@ -70,10 +70,15 @@ def regex_token_count(text: Column) -> Column:
 
 def lang_id_col(text: Column) -> Column:
     """Argmax of marker-word overlap; ties → earlier key in LANG_MARKERS,
-    all-zero → 'unknown'. Thin wrapper over ``lang_id_from_tokens`` —
-    ONE argmax chain, nothing to drift (folding before tokenizing equals
-    folding each token: case never touches whitespace)."""
-    return lang_id_from_tokens(tokens_norm_col(ascii_lower(text)))
+    all-zero → 'unknown'. Thin wrapper over ``lang_marker_counts`` and
+    ``lang_from_marker_counts`` — ONE argmax chain, nothing to drift
+    (folding before tokenizing equals folding each token: case never
+    touches whitespace). Single-column convenience form: every count
+    reference re-derives the tokens; hot paths stage them (see
+    ``lang_marker_counts``)."""
+    return lang_from_marker_counts(
+        lang_marker_counts(tokens_norm_col(ascii_lower(text)))
+    )
 
 
 def tokens_norm_col(text: Column) -> Column:
@@ -89,18 +94,30 @@ def tokens_norm_col(text: Column) -> Column:
     return tokens_col(text)
 
 
-def lang_id_from_tokens(toks_lower: Column) -> Column:
-    """lang_id_col over a MATERIALIZED lowercased-token column — identical
-    values, no per-reference re-tokenization."""
-    scores = {
-        k: F.size(F.array_intersect(toks_lower, F.array(*[F.lit(w) for w in v])))
-        for k, v in LANG_MARKERS.items()
-    }
+def lang_marker_counts(toks_lower: Column) -> Column:
+    """Per-language marker-word overlap counts over a MATERIALIZED
+    lowercased-token column, as one array in LANG_MARKERS key order. Stage
+    it as a projection alias and feed ``lang_from_marker_counts``: the
+    argmax reads each count up to six times, and Catalyst does not CSE
+    into CASE branches, so inline counts re-run their ``array_intersect``
+    per reference (24 per row instead of 4)."""
+    return F.array(
+        *[
+            F.size(F.array_intersect(toks_lower, F.array(*[F.lit(w) for w in v])))
+            for v in LANG_MARKERS.values()
+        ]
+    )
+
+
+def lang_from_marker_counts(counts: Column) -> Column:
+    """Argmax over a staged ``lang_marker_counts`` column: ties → earlier
+    key in LANG_MARKERS, all-zero → 'unknown'."""
     keys = list(LANG_MARKERS)
-    mx = F.greatest(*[scores[k] for k in keys])
+    scores = [counts[i] for i in range(len(keys))]
+    mx = F.greatest(*scores)
     out = F.when(mx == 0, F.lit("unknown"))
-    for k in keys:
-        out = out.when(scores[k] == mx, F.lit(k))
+    for k, s in zip(keys, scores):
+        out = out.when(s == mx, F.lit(k))
     return out.otherwise(F.lit("unknown"))
 
 

@@ -797,11 +797,17 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     drop = pairs.select(F.col("id_b").alias("doc_id")).distinct()
     kept2 = kept.join(drop, "doc_id", "left_anti")
-    # 3. decontaminate vs the benchmark slice of the FULL corpus — the
-    #    corpus side reads the shared shingle table (kept2 ⊂ kept)
+    # 3. decontaminate vs the benchmark slice of the FULL corpus. The
+    #    corpus side is the persisted `kept`, whose shingle table sh_kept
+    #    is exactly its shingle set. Exact: contamination is a per-document
+    #    predicate and kept2 ⊆ kept, so kept2 minus contam(kept) equals
+    #    kept2 minus contam(kept2) row for row. kept2 must keep this single
+    #    consumer (the anti-join below): a lazy relation consumed twice in
+    #    one plan is computed twice, and here that re-runs the whole
+    #    near-dup branch under it — the MinHash Arrow UDF, LSH and verify.
     benchmark = docs.where(F.col("doc_id") % 101 == 0)
     contam = contaminated_ids(
-        kept2, benchmark, "doc_id", "text", n=3, corpus_shingles=sh_kept
+        kept, benchmark, "doc_id", "text", n=3, corpus_shingles=sh_kept
     )
     kept3 = kept2.join(contam, "doc_id", "left_anti")
     # 4. PII redaction (codegen'd regexp chain, zero shuffle)
@@ -1099,13 +1105,28 @@ ORDER BY ce.doc_id, be.bench_id
 _STRAT_QUOTA = 25
 
 
+def _lang_strata(docs: DataFrame) -> DataFrame:
+    """``(doc_id, text, stratum)`` with the language ID as stratum, staged
+    like ``curate.score_documents``: the lowercased tokens, then the four
+    marker counts, then the argmax, each reading the stage before as an
+    attribute. Inline, ``lang_id_col`` re-tokenizes the text for each of
+    its 24 count references."""
+    tl = textstats.tokens_norm_col(textstats.ascii_lower(F.col("text")))
+    return (
+        docs.select("doc_id", "text", tl.alias("_tl"))
+        .withColumn("_mc", textstats.lang_marker_counts(F.col("_tl")))
+        .select(
+            "doc_id",
+            "text",
+            textstats.lang_from_marker_counts(F.col("_mc")).alias("stratum"),
+        )
+    )
+
+
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from otlp_wire_spark.operators.curate import stratified_sample
 
-    docs = _fanout(_t(spark, sf_dir, "documents"))
-    strat = docs.select(
-        "doc_id", "text", textstats.lang_id_col(F.col("text")).alias("stratum")
-    )
+    strat = _lang_strata(_fanout(_t(spark, sf_dir, "documents")))
     return (
         stratified_sample(strat, "stratum", quota=_STRAT_QUOTA)
         .select("doc_id", "stratum")
@@ -1119,10 +1140,7 @@ _TOKEN_BUDGET = 400
 def q_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from otlp_wire_spark.operators.curate import sample_by_token_budget
 
-    docs = _fanout(_t(spark, sf_dir, "documents"))
-    strat = docs.select(
-        "doc_id", "text", textstats.lang_id_col(F.col("text")).alias("stratum")
-    )
+    strat = _lang_strata(_fanout(_t(spark, sf_dir, "documents")))
     return (
         sample_by_token_budget(strat, "stratum", budget=_TOKEN_BUDGET)
         .select("doc_id", "stratum", "n_tokens", "tok_before")

@@ -855,8 +855,7 @@ def test_near_dup_cluster_reps_vs_pair_rule(spark):
 def test_contaminated_ids_shingle_table_parity(spark):
     """corpus_shingles= must give byte-identical results to the direct
     path, including when the supplied table is a SUPERSET of the corpus
-    (the pipeline hands decontamination the near-dup pass's shingle table,
-    built over kept ⊇ kept2)."""
+    (a table shared with a near-dup pass over a larger set)."""
     from otlp_wire_spark.operators.curate import contaminated_ids
     from otlp_wire_spark.operators.dedup import shingle_table
 
@@ -884,6 +883,48 @@ def test_contaminated_ids_shingle_table_parity(spark):
         ).collect()
     )
     assert direct == via_table == [1, 2]
+
+
+def test_decontaminating_the_near_dup_superset_is_exact(spark):
+    """curation_pipeline decontaminates the exact-curated set ``kept``
+    (through its shingle table), not the near-dup survivors ``kept2``.
+    Contamination is a per-document predicate and kept2 ⊆ kept, so the
+    anti-joined rows must be the same — here with one contaminated
+    document that near-dup removal drops and one it keeps."""
+    from otlp_wire_spark.operators.curate import contaminated_ids
+    from otlp_wire_spark.operators.dedup import near_dup_pairs, shingle_table
+
+    shared = "the quick brown fox jumps over the lazy dog near the river bank"
+    rows = [
+        (1, shared),
+        (2, shared + " today"),  # near-dup of 1: dropped, contaminated
+        (3, "alpha beta gamma delta epsilon zeta eta theta"),  # contaminated
+        (4, "one two three four five six seven eight nine"),
+        (5, "red green blue cyan magenta yellow black white"),
+    ]
+    kept = spark.createDataFrame(rows, "doc_id long, text string")
+    bench = spark.createDataFrame(
+        [(100, "over the lazy dog"), (101, "gamma delta epsilon")],
+        "doc_id long, text string",
+    )
+    drop = near_dup_pairs(kept, threshold=0.5).select(
+        F.col("id_b").alias("doc_id")
+    )
+    kept2 = kept.join(drop, "doc_id", "left_anti")
+    assert sorted(r.doc_id for r in kept2.collect()) == [1, 3, 4, 5]
+
+    def decontaminated(contam):
+        return sorted(
+            tuple(r) for r in kept2.join(contam, "doc_id", "left_anti").collect()
+        )
+
+    via_kept = contaminated_ids(
+        kept, bench, corpus_shingles=shingle_table(kept, "doc_id", "text", 3)
+    )
+    assert sorted(r.doc_id for r in via_kept.collect()) == [1, 2, 3]
+    rows_via_kept = decontaminated(via_kept)
+    assert rows_via_kept == decontaminated(contaminated_ids(kept2, bench))
+    assert [r[0] for r in rows_via_kept] == [4, 5]
 
 
 def test_token_budget_sample_greedy_prefix(spark):

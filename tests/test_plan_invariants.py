@@ -13,6 +13,10 @@ instead of only showing in a benchmark:
 - page generation and parse fused into one whole-stage-codegen method too
   large to JIT — ``parse._stage_split_barrier``;
 - single-row-group parquet scans run as one task — ``queries._fanout``;
+- Catalyst does not CSE into CASE branches — the language-ID marker
+  counts are staged as one alias;
+- a lazy relation consumed twice is computed twice — the curation
+  pipeline's near-dup branch has one consumer;
 
 plus the scan shapes: a zero-column count scan and a pushed shipdate
 filter. Counts are occurrences in the optimized plan (Catalyst does not
@@ -137,6 +141,42 @@ def test_curate_keep_filter_reads_staged_scores(spark):
             assert frag not in cond, cond
     assert count_in_plan(df, "lambdafunction") == 2
     assert count_in_plan(df, "size(CASE WHEN") == 0
+
+
+def test_language_markers_intersect_once(spark):
+    """The four marker counts are staged as one alias: the argmax CASE
+    chain reads them as attributes instead of re-running an
+    ``array_intersect`` per branch reference (24 inline)."""
+    assert count_in_plan(_query(spark, "quality_scores"), "array_intersect(") == 4
+
+
+def test_curation_pipeline_runs_near_dup_once(spark):
+    """Decontamination reads ``kept``, so the near-dup survivors ``kept2``
+    have one consumer and the MinHash Arrow UDF runs in one place of the
+    AQE final plan that materialized ``counted`` (a second consumer of
+    kept2 re-runs the whole near-dup branch)."""
+    from otlp_wire_spark import queries_ext
+
+    _query(spark, "curation_pipeline")
+    counted = next(
+        h for h in reversed(queries_ext._PIPE_CACHES[-1])
+        if h.columns == ["doc_id", "n_tokens"]
+    )
+    cached = (
+        spark._jsparkSession.sharedState()
+        .cacheManager()
+        .lookupCachedData(counted._jdf)
+        .get()
+        .cachedRepresentation()
+        .cacheBuilder()
+        .cachedPlan()
+        .toString()
+    )
+    # the top-level final plan ends where its own initial plan starts;
+    # nested cached relations print their own Final/Initial sections
+    assert cached.startswith("AdaptiveSparkPlan isFinalPlan=true"), cached[:2000]
+    final = cached.split("\n+- == Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython") == 1, final
 
 
 @pytest.mark.parametrize("name", ["near_dup_pairs", "ngram_jaccard_pairs"])
